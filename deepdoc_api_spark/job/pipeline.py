@@ -118,12 +118,13 @@ def spans_from_documents(
         import pyarrow as pa
 
         from deepdoc_api_spark.datagen import doc_id_str, gen_doc_spans
+        from deepdoc_api_spark.job.arrow_decode import decode_column
 
         schema = _arrow_schema_of(SPANS_SCHEMA)
         span_type = schema.field(1).type
         for rb in batches:
-            ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
-            texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
+            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
+            texts = decode_column(rb.column(rb.schema.get_field_index("text")))
             out_ids: list = []
             out_spans: list = []
             for d, t in zip(ids, texts):
@@ -268,22 +269,27 @@ def spans_parquet_cached(
 
 def _fused_kernel(chunker_type: str, token_budget: int, toc_params=None):
     """Arrow-native fused kernel (round 8, guide §4.2): spans arrive as
-    one ``list<struct>`` Arrow column decoded with ``to_pylist`` (C
-    path) and chunk rows leave as a directly-built RecordBatch — the
-    pandas object-column transpose on both sides of the worker is gone
-    (measured ~0.4 s off the flagship at sf0.1×4; chunk values are
-    byte-identical, the kernel itself is untouched)."""
+    one ``list<struct>`` Arrow column and chunk rows leave as a
+    directly-built RecordBatch — the pandas object-column transpose on
+    both sides of the worker is gone (measured ~0.4 s off the flagship
+    at sf0.1×4; chunk values are byte-identical, the kernel itself is
+    untouched). The spans column is decoded child column by child
+    column (:func:`~deepdoc_api_spark.job.arrow_decode.decode_column`),
+    not through ``to_pylist``, whose per-element scalar objects cost
+    ~8x as much; a null span element arrives as an all-``None`` span,
+    which extraction drops and the fallback raw text skips."""
 
     def run(batches):
         import pyarrow as pa
 
+        from deepdoc_api_spark.job.arrow_decode import decode_column
         from deepdoc_api_spark.kernels.pipeline import chunk_document
 
         schema = _arrow_schema_of(CHUNK_SCHEMA)
         types = [schema.field(i).type for i in range(len(schema))]
         for rb in batches:
-            ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
-            spans = rb.column(rb.schema.get_field_index("spans")).to_pylist()
+            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
+            spans = decode_column(rb.column(rb.schema.get_field_index("spans")))
             rows: list = []
             for doc_id, s in zip(ids, spans):
                 rows.extend(
@@ -327,8 +333,10 @@ def _extract_span_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
             pdf["media_ref"], pdf["offset"],
         ):
             rows.append((doc_id, int(pos), -1, "_raw", text or "", "", 0, None))
+            # a null int column arrives as float NaN, which ``or`` keeps
             recs = span_to_records(
-                kind or "", text or "", media_ref, int(offset or 0)
+                kind or "", text or "", media_ref,
+                0 if pd.isna(offset) else int(offset),
             )
             for i, r in enumerate(recs):
                 rows.append(

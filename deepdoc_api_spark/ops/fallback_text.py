@@ -23,7 +23,7 @@ characters and character offsets agree byte-for-byte (unicode
 whitespace would diverge; documented limit).
 
 Scale note: one row in → ~N/900 rows out, computed entirely inside one
-``mapInPandas`` crossing with no shuffle — the scan partitioning is the
+``mapInArrow`` crossing with no shuffle — the scan partitioning is the
 output partitioning.
 """
 
@@ -56,11 +56,12 @@ def fallback_window_chunks(
     def run(batches):
         import pyarrow as pa
 
+        from deepdoc_api_spark.job.arrow_decode import decode_column
         from deepdoc_api_spark.kernels.chunkers import fallback_chunks
 
         for rb in batches:
-            ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
-            texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
+            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
+            texts = decode_column(rb.column(rb.schema.get_field_index("text")))
             o_id: list = []
             o_idx: list = []
             o_txt: list = []

@@ -32,21 +32,22 @@ def list_col_to_matrix(col, dim: int) -> np.ndarray:
     """Arrow list<float> column → (n, dim) float64 matrix.
 
     Fast path: flatten the value buffer and reshape (valid when every
-    list is exactly ``dim`` long — the embeddings-table contract);
+    list is exactly ``dim`` long — the embeddings-table contract, checked
+    per row from the offsets: a total of ``n * dim`` alone would let rows
+    of ``dim+1`` and ``dim-1`` reshape silently into wrong rows);
     fallback to the generic python path otherwise (ragged/null rows
     cannot occur in the embeddings table, but never crash on them).
+    Ragged rows are truncated or zero-padded to ``dim``.
     """
     n = len(col)
-    try:
+    if col.null_count == 0 and (np.diff(col.offsets.to_numpy()) == dim).all():
         flat = col.flatten().to_numpy(zero_copy_only=False)
-        if col.null_count == 0 and len(flat) == n * dim:
-            return flat.reshape(n, dim).astype(np.float64)
-    except Exception:
-        pass
+        return flat.reshape(n, dim).astype(np.float64)
     rows = col.to_pylist()
     out = np.zeros((n, dim), dtype=np.float64)
     for i, r in enumerate(rows):
         if r is not None:
+            r = r[:dim]
             out[i, : len(r)] = np.asarray(r, dtype=np.float64)
     return out
 

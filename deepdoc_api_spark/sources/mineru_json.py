@@ -52,6 +52,7 @@ final assembly.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -298,12 +299,18 @@ def ensure_mineru_jsonl(sf_dir: str) -> str:
     # fixed name in world-writable /tmp can be pre-created (squatted)
     # by another user — either DoS'ing writes or substituting content a
     # later process would silently consume. uid-suffixed dir, 0o700,
-    # ownership checked after creation.
+    # ownership checked after creation. lstat, not stat: a planted
+    # symlink would otherwise pass as the target it points to.
     root = os.path.join(
         tempfile.gettempdir(), f"ddspark-mineru-cache-{os.getuid()}"
     )
     os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.stat(root)
+    st = os.lstat(root)
+    if not stat.S_ISDIR(st.st_mode):
+        raise RuntimeError(
+            f"mineru cache dir {root!r} is a symlink or not a directory "
+            f"— refusing to use it"
+        )
     if st.st_uid != os.getuid():
         raise RuntimeError(
             f"mineru cache dir {root!r} is owned by uid {st.st_uid}, "

@@ -26,9 +26,6 @@ from tests.test_reference_differential import (
     _load_reference,
 )
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF_PATH), reason="reference snapshot not available"
-)
 
 
 def _write_jsonl(tmp_path, docs):
@@ -146,6 +143,9 @@ def test_reader_dispatch_matrix(spark, tmp_path):
     ]
 
 
+@pytest.mark.skipif(
+    not os.path.exists(REF_PATH), reason="reference snapshot not available"
+)
 def test_reader_plus_kernels_match_reference_process_layout(spark, tmp_path):
     """Reader spans → extract_records → format_records must equal the
     reference's process_layout on randomized MinerU layouts — the
@@ -334,3 +334,29 @@ def test_jsonl_cache_keyed_on_doc_id_digest(tmp_path):
     assert pc != pa_
     # and the cached contents really are per-id-set
     assert '"doc_id": "4"' in open(pc).read().splitlines()[0]
+
+
+def test_jsonl_cache_rejects_symlinked_root(tmp_path, monkeypatch):
+    """A cache root planted as a symlink to another user-owned dir must
+    be refused: ``stat`` would follow it and pass the ownership check."""
+    import tempfile
+
+    import duckdb
+
+    from deepdoc_api_spark.sources.mineru_json import ensure_mineru_jsonl
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    duckdb.connect().execute(
+        f"copy (select 1::BIGINT as doc_id) to '{sf}/documents.parquet' "
+        "(format parquet)"
+    )
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    (tmp / f"ddspark-mineru-cache-{os.getuid()}").symlink_to(elsewhere)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    with pytest.raises(RuntimeError, match="symlink"):
+        ensure_mineru_jsonl(str(sf))
+    assert list(elsewhere.iterdir()) == []

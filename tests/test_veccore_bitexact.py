@@ -26,6 +26,7 @@ from deepdoc_api_spark.ops.similarity import (
 from deepdoc_api_spark.ops.veccore import (
     argmax_cid,
     band_keys,
+    list_col_to_matrix,
     seq_norm,
     seq_sum,
     sim_micro_matrix,
@@ -173,3 +174,20 @@ def test_seq_sum_is_strictly_sequential():
     for x in v:
         acc = acc + x
     assert seq_sum(v[None, :])[0] == acc
+
+
+def test_list_col_to_matrix_keeps_ragged_rows_apart():
+    """Rows of dim+1 and dim-1 sum to 2*dim values: the fast path's
+    reshape must not be taken on the total length alone, or the second
+    row would start with the first row's extra value."""
+    import pyarrow as pa
+
+    long_row = [float(i + 1) for i in range(DIM + 1)]
+    short_row = [float(100 + i) for i in range(DIM - 1)]
+    col = pa.array([long_row, short_row], type=pa.list_(pa.float32()))
+    got = list_col_to_matrix(col, DIM)
+    assert got.tolist() == [long_row[:DIM], short_row + [0.0]]
+    # a slice of a regular batch still takes the fast path, unshifted
+    rows = _adversarial_vectors(n=6)
+    col = pa.array(rows, type=pa.list_(pa.float32())).slice(2, 3)
+    assert list_col_to_matrix(col, DIM).tolist() == rows[2:5]
