@@ -13,7 +13,7 @@ Architecture (Spark-first, not a port):
   extraction, PDF-layout formatting, chunkers, tokenizer). Zero Spark
   imports; unit-testable; double as the in-driver correctness oracle.
 - ``job/``      — the Spark layer: Arrow-vectorized ``mapInArrow``
-  pipeline, skew sharding for giant documents, per-partition
+  pipeline, one task per giant document, per-partition
   checkpointed progress with resume.
 - ``ops/``      — corpus-level training-data operations (dedup,
   similarity search, text analysis) as declarative DataFrame plans.

@@ -9,7 +9,10 @@ that computed them, and a progress row (docs/chunks/bytes/wall_ms +
 input-snapshot lineage) is recorded per bucket. A re-run anti-joins the
 input against completed buckets and processes only the remainder —
 cancel (``sc.cancelJobGroup``) and crash recovery are therefore the
-same code path (SURVEY §3.3).
+same code path (SURVEY §3.3). The bucket writer is a ``mapInArrow``
+stage on the flagship's kernel code (``job/pipeline.py``: the same span
+decode, ``chunk_document`` and chunk RecordBatch build), so committed
+chunks are the flagship's chunks.
 
 Storage abstraction: on a production cluster this is an Iceberg
 ``chunks`` table + ``progress`` table written with ``writeTo().append()``
@@ -27,50 +30,16 @@ import glob
 import json
 import os
 import time
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
-import pandas as pd
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import CHUNK_COLUMNS, PROGRESS_DDL
-from .pipeline import chunk_documents
+from ..schema import CHUNK_SCHEMA, PROGRESS_DDL, PROGRESS_SCHEMA
+from .pipeline import _arrow_schema_of, _batch_of, _decode
 
 DEFAULT_NUM_BUCKETS = 64
-
-_ARROW_CHUNK_SCHEMA = pa.schema(
-    [
-        pa.field("chunk_id", pa.string()),
-        pa.field("doc_id", pa.string()),
-        pa.field("chunk_index", pa.int32()),
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("pages", pa.list_(pa.int32())),
-        pa.field("hierarchy", pa.list_(pa.string())),
-        pa.field("headings", pa.list_(pa.string())),
-        pa.field("chunker_type", pa.string()),
-        pa.field("chunk_size", pa.int32()),
-        pa.field("chunk_overlap", pa.int32()),
-        pa.field(
-            "bbox",
-            pa.struct(
-                [
-                    pa.field("left", pa.float64()),
-                    pa.field("top", pa.float64()),
-                    pa.field("right", pa.float64()),
-                    pa.field("bottom", pa.float64()),
-                    pa.field("width", pa.float64()),
-                    pa.field("height", pa.float64()),
-                    pa.field("area", pa.float64()),
-                ]
-            ),
-        ),
-        pa.field("extractor_used", pa.string()),
-    ]
-)
 
 
 def _chunks_dir(out_dir: str) -> str:
@@ -150,34 +119,9 @@ def progress_df(spark: SparkSession, out_dir: str) -> DataFrame:
                     rows.append(json.load(f))
             except Exception:
                 continue
+    cols = PROGRESS_SCHEMA.fieldNames()
     return spark.createDataFrame(
-        pd.DataFrame(
-            rows,
-            columns=[
-                "run_id", "partition_id", "status", "docs", "chunks",
-                "bytes", "wall_ms", "input_snapshot", "ts",
-            ],
-        ).astype(
-            {
-                "partition_id": "int32", "docs": "int64", "chunks": "int64",
-                "bytes": "int64", "wall_ms": "int64", "ts": "float64",
-            }
-        )
-        if rows
-        else pd.DataFrame(
-            {
-                "run_id": pd.Series(dtype="object"),
-                "partition_id": pd.Series(dtype="int32"),
-                "status": pd.Series(dtype="object"),
-                "docs": pd.Series(dtype="int64"),
-                "chunks": pd.Series(dtype="int64"),
-                "bytes": pd.Series(dtype="int64"),
-                "wall_ms": pd.Series(dtype="int64"),
-                "input_snapshot": pd.Series(dtype="object"),
-                "ts": pd.Series(dtype="float64"),
-            }
-        ),
-        schema=PROGRESS_DDL,
+        [tuple(r.get(c) for c in cols) for r in rows], PROGRESS_DDL
     )
 
 
@@ -195,74 +139,64 @@ def _writer_kernel(
     token_budget: int,
     num_buckets: int,
 ):
-    """mapInPandas kernel: chunk each bucket's docs, stream them to a
+    """mapInArrow kernel: chunk each bucket's docs, stream them to a
     per-bucket ``pq.ParquetWriter`` (bounded buffer — a bucket larger
     than worker memory must not be accumulated in RAM), commit each
-    bucket file atomically by rename, emit one progress row per bucket."""
+    bucket file atomically by rename, emit one progress row per bucket.
+    A bucket's ``wall_ms`` is the time spent on its own docs and its
+    own writes, not the task's running total."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from deepdoc_api_spark.kernels.pipeline import chunk_document
 
         chunks_dir = _chunks_dir(out_dir)
         progress_dir = _progress_dir(out_dir)
         os.makedirs(chunks_dir, exist_ok=True)
         os.makedirs(progress_dir, exist_ok=True)
-
+        schema = _arrow_schema_of(CHUNK_SCHEMA)
         per_bucket: dict = {}
-        t0 = time.monotonic()
 
         def flush(b: int, st: dict) -> None:
-            rows = st["rows"]
-            if not rows:
-                return
-            table = pa.Table.from_pylist(
-                [{k: r[k] for k in CHUNK_COLUMNS} for r in rows],
-                schema=_ARROW_CHUNK_SCHEMA,
-            )
             if st["writer"] is None:
                 st["tmp"] = os.path.join(
                     chunks_dir, f"bucket-{b}.parquet.tmp-{os.getpid()}"
                 )
-                st["writer"] = pq.ParquetWriter(st["tmp"], _ARROW_CHUNK_SCHEMA)
-            st["writer"].write_table(table)
-            st["chunks"] += len(rows)
-            st["rows"] = []
+                st["writer"] = pq.ParquetWriter(st["tmp"], schema)
+            if st["rows"]:
+                st["writer"].write_batch(_batch_of(st["rows"], schema))
+                st["chunks"] += len(st["rows"])
+                st["rows"] = []
 
-        for pdf in batches:
-            for doc_id, spans, bucket in zip(
-                pdf["doc_id"], pdf["spans"], pdf["bucket"]
-            ):
-                b = int(bucket)
+        for rb in batches:
+            for doc_id, spans, b in zip(*_decode(rb, "doc_id", "spans", "bucket")):
+                t0 = time.monotonic()
                 st = per_bucket.setdefault(
                     b,
                     {
                         "rows": [], "docs": 0, "bytes": 0, "chunks": 0,
-                        "writer": None, "tmp": None,
+                        "writer": None, "tmp": None, "wall_s": 0.0,
                     },
                 )
-                spans_list = spans if spans is not None else []
+                spans = spans or []
                 st["docs"] += 1
-                st["bytes"] += sum(len(s.get("text") or "") for s in spans_list)
+                st["bytes"] += sum(len(s.get("text") or "") for s in spans)
                 st["rows"].extend(
-                    chunk_document(doc_id, spans_list, chunker_type, token_budget)
+                    chunk_document(doc_id, spans, chunker_type, token_budget)
                 )
                 if len(st["rows"]) >= FLUSH_ROWS:
                     flush(b, st)
+                st["wall_s"] += time.monotonic() - t0
 
         out_rows = []
         for b, st in sorted(per_bucket.items()):
+            t0 = time.monotonic()
+            # a bucket whose docs produced zero chunk rows still commits
+            # an (empty) file, so its progress row is honest
             flush(b, st)
-            if st["writer"] is None:
-                # bucket present but produced zero chunk rows: still
-                # commit an empty file so the progress row is honest
-                st["tmp"] = os.path.join(
-                    chunks_dir, f"bucket-{b}.parquet.tmp-{os.getpid()}"
-                )
-                st["writer"] = pq.ParquetWriter(st["tmp"], _ARROW_CHUNK_SCHEMA)
             st["writer"].close()
             final = os.path.join(chunks_dir, f"bucket-{b}.parquet")
             os.replace(st["tmp"], final)  # atomic commit of the bucket
-            wall_ms = int((time.monotonic() - t0) * 1000)
+            st["wall_s"] += time.monotonic() - t0
             prow = {
                 "run_id": run_id,
                 "partition_id": b,
@@ -270,7 +204,7 @@ def _writer_kernel(
                 "docs": st["docs"],
                 "chunks": st["chunks"],
                 "bytes": st["bytes"],
-                "wall_ms": wall_ms,
+                "wall_ms": int(st["wall_s"] * 1000),
                 "input_snapshot": input_snapshot,
                 "ts": time.time(),
                 # lineage guard consumed by completed_buckets on resume
@@ -283,13 +217,7 @@ def _writer_kernel(
             os.replace(ptmp, os.path.join(progress_dir, f"bucket-{b}.json"))
             out_rows.append(prow)
         if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    "run_id", "partition_id", "status", "docs", "chunks",
-                    "bytes", "wall_ms", "input_snapshot", "ts",
-                ],
-            )
+            yield _batch_of(out_rows, _arrow_schema_of(PROGRESS_SCHEMA))
 
     return run
 
@@ -353,7 +281,7 @@ def run_checkpointed(
 
     spark.sparkContext.setJobGroup(run_id, f"deepdoc chunk run {run_id}")
     try:
-        progress_rows = work.mapInPandas(
+        progress_rows = work.mapInArrow(
             _writer_kernel(
                 out_dir, run_id, input_snapshot, chunker_type,
                 token_budget, int(num_buckets),

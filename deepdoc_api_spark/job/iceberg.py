@@ -30,15 +30,11 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schema import CHUNK_DDL
+
+#: the chunk columns plus the lineage columns of one run increment
 CHUNKS_DDL_COLS = (
-    "chunk_id string, doc_id string, chunk_index int, kind string, "
-    "text string, media_ref string, pages array<int>, "
-    "hierarchy array<string>, headings array<string>, chunker_type string, "
-    "chunk_size int, chunk_overlap int, "
-    "bbox struct<left:double,top:double,right:double,bottom:double,"
-    "width:double,height:double,area:double>, "
-    "extractor_used string, "
-    "run_id string, input_snapshot string, partition_id int"
+    f"{CHUNK_DDL}, run_id string, input_snapshot string, partition_id int"
 )
 
 
@@ -338,7 +334,7 @@ def run_checkpointed_iceberg(
     processed = work.groupBy(F.col("bucket").alias("partition_id")).agg(
         F.count("*").alias("docs")
     )
-    written = spark.table(chunks_tbl).filter(
+    written = spark.table(f"{catalog}.{namespace}.chunks").filter(
         (F.col("run_id") == run_id)
         & (F.col("input_snapshot") == input_snapshot)
     )

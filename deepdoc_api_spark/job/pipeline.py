@@ -5,39 +5,39 @@ Plan shape (SURVEY §3.1 Spark lifecycle):
     read spans table
       ├─ size-class on size(spans)                (JVM-side, no shuffle)
       ├─ small docs  → fused mapInArrow kernel    (no shuffle at all)
-      └─ giant docs  → posexplode → sharded per-span extraction
-                      → groupBy(doc_id) reassembly → chunk pass
+      └─ giant docs  → repartition(doc_id)        (one giant per task)
+                      → the same fused kernel
     union → chunks DataFrame
 
-Why two paths: chunking is per-document-sequential (hierarchy state),
-so a document is the atomic unit of the fused kernel. That makes one
-20 000-span document a straggler inside whatever partition it lands in
-— and AQE does not split a skewed *UDF* stage (it only handles shuffle
-joins/aggregations). The explicit size-class + shard path is the
-axis-B skew answer (SURVEY §4): the expensive per-span extraction
-(HTML DOM parsing) of a giant document is spread over many tasks via
-``repartition(doc_id, shard)``, and only the cheap ordered fold +
-chunk pass runs single-task per document after a narrow-ish shuffle of
-the 0.1% giant tail. Both paths share the same kernel cascade
-(``kernels.pipeline.chunks_from_prepared``), so output is
-byte-identical regardless of path — tests/test_spark_equality.py
-asserts it.
+Why two branches: chunking is per-document-sequential (hierarchy
+state), so a document is the atomic unit of the fused kernel. That
+makes one 20 000-span document a straggler inside whatever partition
+it lands in — and AQE does not split a skewed *UDF* stage (it only
+handles shuffle joins/aggregations). The size-class gives each giant
+its own task instead (SURVEY §4, axis B). Both branches run the same
+kernel code, so output is byte-identical regardless of branch —
+tests/test_spark_equality.py asserts it. The checkpointed job
+(``job/checkpoint.py``) decodes spans and builds chunk batches with the
+same helpers, :func:`_decode` and :func:`_batch_of`.
 
-Reference parity: large-doc splitting + recombination mirrors
-``/root/reference/app/mineru_adapter/layout_processor.py:266-359`` (split)
-and ``:24-47`` (combine) — there: 100-page PDF parts through a CLI;
-here: span-range shards through a shuffle.
+Reference parity: the reference splits PDFs over 100 pages into parts
+and recombines them (``app/mineru_adapter/layout_processor.py:266-359``
+and ``:24-47``); here a giant document stays whole on one task. One
+10^6-span document took 73-80 s at 3.9-4.7 GB peak Python RSS that way
+(local[4], 4-core x86 host), where a span-sharded explode → extract →
+regroup plan took 96-105 s at 5.4-5.5 GB.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import CHUNK_COLUMNS, CHUNK_DDL, CHUNK_SCHEMA, SPANS_DDL, SPANS_SCHEMA
+from ..schema import CHUNK_DDL, CHUNK_SCHEMA, SPANS_DDL, SPANS_SCHEMA
+from .arrow_decode import decode_column
 
 
 def _arrow_schema_of(struct_type):
@@ -47,6 +47,22 @@ def _arrow_schema_of(struct_type):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(struct_type)
+
+
+def _decode(rb: pa.RecordBatch, *names: str) -> list:
+    """The named columns of ``rb`` as Python lists
+    (:func:`~deepdoc_api_spark.job.arrow_decode.decode_column`)."""
+    return [decode_column(rb.column(rb.schema.get_field_index(n))) for n in names]
+
+
+def _batch_of(rows: list, schema: pa.Schema) -> pa.RecordBatch:
+    """Row dicts (e.g. ``chunk_document`` output) as one RecordBatch of
+    ``schema``; keys outside the schema are ignored."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[f.name] for r in rows], type=f.type) for f in schema],
+        schema=schema,
+    )
+
 
 #: docs with at least this many spans take the giant-doc path. Round-8
 #: re-derivation (guide §1.2: algorithm before config): the giant
@@ -61,18 +77,11 @@ def _arrow_schema_of(struct_type):
 #: The old 4000-span threshold isolated ~0.12 s documents: at sf0.1×4
 #: it spent ~0.5-2.5 s of wall on the second scan + exchange to save
 #: nothing (measured round 8; plans/r08/). True monsters (≥ ~10^5
-#: spans) still take the isolate/shard path unchanged.
+#: spans) still get a task of their own.
 DEFAULT_SKEW_THRESHOLD = 32768
-#: spans per extraction shard on the giant path
-SHARD_SPANS = 512
 #: span-cache entries idle longer than this are sweepable (mtime is
 #: refreshed on every cache hit, so this measures idleness, not age)
 _CACHE_SWEEP_AGE_S = 6 * 3600
-
-_RECORD_RAW_DDL = (
-    "doc_id string, pos int, rec_idx int, kind string, content string, "
-    "media_ref string, page int, bbox_json string"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -115,16 +124,12 @@ def spans_from_documents(
     # that transpose (measured 3.1 → 2.4 s noop-isolated at sf0.1×4,
     # bit-identical rows — the corpus is a pure function of the input).
     def gen(batches):
-        import pyarrow as pa
-
         from deepdoc_api_spark.datagen import doc_id_str, gen_doc_spans
-        from deepdoc_api_spark.job.arrow_decode import decode_column
 
         schema = _arrow_schema_of(SPANS_SCHEMA)
         span_type = schema.field(1).type
         for rb in batches:
-            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
-            texts = decode_column(rb.column(rb.schema.get_field_index("text")))
+            ids, texts = _decode(rb, "doc_id", "text")
             out_ids: list = []
             out_spans: list = []
             for d, t in zip(ids, texts):
@@ -280,120 +285,20 @@ def _fused_kernel(chunker_type: str, token_budget: int, toc_params=None):
     which extraction drops and the fallback raw text skips."""
 
     def run(batches):
-        import pyarrow as pa
-
-        from deepdoc_api_spark.job.arrow_decode import decode_column
         from deepdoc_api_spark.kernels.pipeline import chunk_document
 
         schema = _arrow_schema_of(CHUNK_SCHEMA)
-        types = [schema.field(i).type for i in range(len(schema))]
         for rb in batches:
-            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
-            spans = decode_column(rb.column(rb.schema.get_field_index("spans")))
             rows: list = []
-            for doc_id, s in zip(ids, spans):
+            for doc_id, s in zip(*_decode(rb, "doc_id", "spans")):
                 rows.extend(
                     chunk_document(
-                        doc_id,
-                        s if s is not None else [],
-                        chunker_type,
-                        token_budget,
+                        doc_id, s or [], chunker_type, token_budget,
                         toc_params=toc_params,
                     )
                 )
             if rows:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([r[c] for r in rows], type=t)
-                        for c, t in zip(CHUNK_COLUMNS, types)
-                    ],
-                    schema=schema,
-                )
-
-    return run
-
-
-# ---------------------------------------------------------------------------
-# sharded giant-doc path
-# ---------------------------------------------------------------------------
-
-
-def _extract_span_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-span extraction (the shardable half): one input row per span,
-    output rows are normalized records plus one ``_raw`` row per span
-    (rec_idx = -1) carrying the raw text for the fallback cascade."""
-    import json
-
-    from deepdoc_api_spark.kernels.layout import span_to_records
-
-    for pdf in batches:
-        rows = []
-        for doc_id, pos, kind, text, media_ref, offset in zip(
-            pdf["doc_id"], pdf["pos"], pdf["kind"], pdf["text"],
-            pdf["media_ref"], pdf["offset"],
-        ):
-            rows.append((doc_id, int(pos), -1, "_raw", text or "", "", 0, None))
-            # a null int column arrives as float NaN, which ``or`` keeps
-            recs = span_to_records(
-                kind or "", text or "", media_ref,
-                0 if pd.isna(offset) else int(offset),
-            )
-            for i, r in enumerate(recs):
-                rows.append(
-                    (
-                        doc_id,
-                        int(pos),
-                        i,
-                        r["kind"],
-                        r["content"],
-                        r["media_ref"],
-                        int(r["page"]),
-                        # json round-trips floats exactly (repr-based),
-                        # so shard-path bboxes stay byte-identical to
-                        # the fused path's
-                        json.dumps(r["bbox"]) if r.get("bbox") else None,
-                    )
-                )
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "pos", "rec_idx", "kind", "content",
-                    "media_ref", "page", "bbox_json",
-                ],
-            )
-
-
-def _assemble_group(chunker_type: str, token_budget: int, toc_params=None):
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import json
-
-        from deepdoc_api_spark.kernels.pipeline import chunks_from_prepared
-
-        pdf = pdf.sort_values(["pos", "rec_idx"], kind="mergesort")
-        doc_id = pdf["doc_id"].iloc[0]
-        raw_texts = [
-            t or "" for t in pdf.loc[pdf["rec_idx"] < 0, "content"]
-        ]
-        recs = [
-            {
-                "kind": k,
-                "content": c or "",
-                "media_ref": m or "",
-                "page": int(p),
-                "offset": 0,
-                "bbox": json.loads(bj) if bj else None,
-            }
-            for k, c, m, p, bj in zip(
-                pdf["kind"], pdf["content"], pdf["media_ref"], pdf["page"],
-                pdf["bbox_json"],
-            )
-            if k != "_raw"
-        ]
-        chunks = chunks_from_prepared(
-            doc_id, recs, raw_texts, chunker_type, token_budget, toc_params
-        )
-        return pd.DataFrame(chunks, columns=CHUNK_COLUMNS)
+                yield _batch_of(rows, schema)
 
     return run
 
@@ -408,26 +313,14 @@ def chunk_documents(
     chunker_type: str = "hybrid",
     token_budget: int = 512,
     skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
-    shard_spans: int = SHARD_SPANS,
-    skew_strategy: str = "isolate",
     toc_params=None,
 ) -> DataFrame:
     """spans table → chunks table (declarative; caller triggers action).
 
-    ``skew_strategy`` for docs above ``skew_threshold`` spans:
-
-    * ``"isolate"`` (default): repartition giants one-doc-per-task and
-      run the same fused kernel — zero extra shuffle. Measured best for
-      giants up to ~10^5 spans: at sf0.1×8 the shard path spent as much
-      wall time on 0.1% of docs as on the other 99.9% (two full-text
-      shuffles + a pandas re-sort), while isolation costs only the
-      kernel itself.
-    * ``"shard"``: posexplode → per-span extraction shards → groupBy
-      reassembly. The right tool once a SINGLE document's extraction
-      exceeds what one task should hold (≳10^6 spans) — it trades two
-      shuffles of the doc's text for span-level parallelism.
-
-    Both strategies produce byte-identical chunks (tested).
+    Docs with at least ``skew_threshold`` spans are repartitioned one
+    doc per task and run through the same fused kernel, so a giant
+    never holds up a task full of small docs; output is byte-identical
+    to running every doc inline (tested).
     """
     if toc_params and toc_params.get("section_pattern"):
         import re as _re
@@ -437,52 +330,19 @@ def chunk_documents(
         # cascade, silently degrading ALL TOC output to window chunks
         _re.compile(toc_params["section_pattern"])
     spark = spans_df.sparkSession
+    # an EXPLICIT partition count: with a bare repartition-by-column AQE
+    # coalesces the small-byte giant shuffle into a handful of
+    # partitions, serializing the per-document chunk pass. Chunking cost
+    # is per-doc CPU, not bytes.
     n_parts = spark.sparkContext.defaultParallelism * 2
     src = spans_df.select("doc_id", "spans")
     n_spans = F.size(F.col("spans"))
+    kernel = _fused_kernel(chunker_type, token_budget, toc_params)
 
-    small = src.filter(n_spans < skew_threshold)
-    giant = src.filter(n_spans >= skew_threshold)
-
-    small_chunks = small.mapInArrow(
-        _fused_kernel(chunker_type, token_budget, toc_params), CHUNK_DDL
-    )
-
-    if skew_strategy == "isolate":
-        giant_chunks = giant.repartition(n_parts, "doc_id").mapInArrow(
-            _fused_kernel(chunker_type, token_budget, toc_params), CHUNK_DDL
-        )
-        return small_chunks.unionByName(giant_chunks)
-
-    # --- shard strategy ---
-    # Both skew-path exchanges carry EXPLICIT partition counts: with a
-    # bare repartition-by-column AQE coalesces the small-byte shuffles
-    # into a handful of partitions, serializing the per-document chunk
-    # pass (measured: a ~15 s straggler tail at local[32] that capped
-    # scaling efficiency at 0.41). Chunking cost is per-DOC CPU, not
-    # bytes — AQE's size heuristic is the wrong objective here.
-    exploded = (
-        giant.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .select(
-            "doc_id",
-            "pos",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-        )
-        # spread one giant doc's spans over many tasks
-        .repartition(
-            n_parts, F.col("doc_id"), (F.col("pos") / F.lit(shard_spans)).cast("int")
-        )
-    )
-    giant_records = exploded.mapInPandas(_extract_span_shards, _RECORD_RAW_DDL)
+    small_chunks = src.filter(n_spans < skew_threshold).mapInArrow(kernel, CHUNK_DDL)
     giant_chunks = (
-        giant_records.repartition(n_parts, "doc_id")
-        .groupBy("doc_id")
-        .applyInPandas(
-            _assemble_group(chunker_type, token_budget, toc_params), CHUNK_DDL
-        )
+        src.filter(n_spans >= skew_threshold)
+        .repartition(n_parts, "doc_id")
+        .mapInArrow(kernel, CHUNK_DDL)
     )
-
     return small_chunks.unionByName(giant_chunks)

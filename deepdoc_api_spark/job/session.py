@@ -5,7 +5,7 @@ Centralizes the configs that matter at 100 TB scale:
 * AQE on (post-shuffle coalescing + skew-join splitting; the north rule
   calls for "AQE-tuned shuffles") — note AQE does NOT rebalance a
   straggler UDF partition, which is why job.pipeline does explicit
-  size-classing/sharding for giant documents;
+  size-classing for giant documents (one task each);
 * Arrow enabled with a bounded batch size so one pathological document
   batch cannot blow a Python worker (SURVEY §4 spill note). 1024 rows
   per batch measured best for the fused kernel: 128-row batches cost

@@ -152,8 +152,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A round-8 A/B also ran this as a Python md5 kernel: warm cost
     ROSE 0.93 vs 0.40 s at sf0.1 — commons-codec md5 under the JVM
     beats hashlib-per-shingle here — so the JVM expression stays; the
-    Python twin lives on in texthash.py for the fused jaccard sketch
-    comparison test.)
+    A/B is recorded in OPTIMIZATION_r08.md.)
     """
     mh = [
         f"array_min(transform(dg, d -> {_window_expr(k)})) as mh{k}"
@@ -711,8 +710,7 @@ def simhash_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-8 A/B, interleaved ×4: a Python md5+numpy bit-fold kernel
     # measured consistently SLOWER — warm 1.41-1.74 vs 1.18-1.51 s at
     # sf0.1 — so the JVM expression form stays, like the 16-bit
-    # variant; the Python twin remains bit-equality-pinned in
-    # tests/test_texthash_bitexact.py as the A/B record)
+    # variant; the A/B is recorded in OPTIMIZATION_r08.md)
     words = _docs_words(spark, sf_dir).selectExpr(
         "doc_id", "array_distinct(w) as dw"
     )

@@ -85,12 +85,6 @@ CHUNK_DDL = (
 
 CHUNK_COLUMNS = [f.name for f in CHUNK_SCHEMA.fields]
 
-# intermediate record rows for the sharded giant-document path
-RECORD_DDL = (
-    "doc_id string, pos int, rec_idx int, kind string, content string, "
-    "media_ref string, page int"
-)
-
 # progress / checkpoint table (FIXTURES.md §3; Redis job record analogue,
 # app/main.py:318-328, at partition granularity)
 PROGRESS_SCHEMA = T.StructType(

@@ -1,6 +1,7 @@
 """Round-6 adversarial-spans sweep: fuzzed span SEQUENCES fed directly
 through the Spark pipeline (Arrow boundary, fused kernel dispatch,
-skew paths) must chunk identically to the same kernels run in-driver.
+giant branch, checkpointed writer) must chunk identically to the same
+kernels run in-driver.
 
 The edge/fuzz corpus sweeps (tests/test_edge_corpus_oracle.py) fuzz
 document TEXT through the datagen recipe; this file removes the
@@ -18,6 +19,7 @@ import pyarrow as pa
 import pytest
 
 from deepdoc_api_spark.job.arrow_decode import decode_column
+from deepdoc_api_spark.job.checkpoint import load_chunks, run_checkpointed
 from deepdoc_api_spark.job.pipeline import _arrow_schema_of, chunk_documents
 from deepdoc_api_spark.kernels.pipeline import chunk_document
 from deepdoc_api_spark.schema import SPANS_DDL, SPANS_SCHEMA
@@ -90,7 +92,7 @@ _SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 _NULL_SPAN = dict.fromkeys(_SPAN_FIELDS)
 
 
-def _assert_spark_equals_driver(sdf, docs, chunker_type, **kw):
+def _assert_spark_equals_driver(chunks_df, docs, chunker_type):
     """Spark's chunks per doc equal driver-side ``chunk_document``'s,
     with a null ``spans`` list read as [] and a null span element as an
     all-None span."""
@@ -106,11 +108,9 @@ def _assert_spark_equals_driver(sdf, docs, chunker_type, **kw):
         for did, spans in docs
     }
     got = {}
-    for row in (
-        chunk_documents(sdf, chunker_type, **kw)
-        .select("doc_id", "kind", "text", "media_ref", "chunk_index")
-        .collect()
-    ):
+    for row in chunks_df.select(
+        "doc_id", "kind", "text", "media_ref", "chunk_index"
+    ).collect():
         got.setdefault(row.doc_id, []).append(
             (row.kind, row.text, row.media_ref, row.chunk_index)
         )
@@ -137,7 +137,10 @@ def test_adversarial_spans_spark_equals_driver(spark, chunker_type):
     docs.append(("adv-giant", _fuzz_spans(rng, 4500)))
 
     _assert_spark_equals_driver(
-        spark.createDataFrame(docs, SPANS_DDL).repartition(8, "doc_id"),
+        chunk_documents(
+            spark.createDataFrame(docs, SPANS_DDL).repartition(8, "doc_id"),
+            chunker_type,
+        ),
         docs,
         chunker_type,
     )
@@ -181,26 +184,31 @@ def test_decode_column_matches_to_pylist_on_slices():
 
 
 @pytest.mark.parametrize(
-    "chunker_type,skew_strategy",
+    "chunker_type,path",
     [
         ("hybrid", "isolate"),
         ("hierarchical", "isolate"),
         ("toc", "isolate"),
         ("mineru", "isolate"),
         ("fallback", "isolate"),
-        ("hybrid", "shard"),
+        ("hybrid", "checkpointed"),
     ],
 )
-def test_null_spans_spark_equals_driver(spark, chunker_type, skew_strategy):
+def test_null_spans_spark_equals_driver(spark, tmp_path, chunker_type, path):
     """A null anywhere in the span table chunks like the driver with
     null elements read as all-None spans, instead of failing the job.
     1,100 docs in one partition cross the worker as several 1,024-row
-    Arrow batches; docs of >= 8 spans take the giant path."""
+    Arrow batches. On the ``isolate`` path docs of >= 8 spans take the
+    giant branch; the ``checkpointed`` path is ``run_checkpointed`` read
+    back through ``load_chunks``."""
     docs = _null_docs(random.Random(f"nullspans:{chunker_type}"), 1100)
-    _assert_spark_equals_driver(
-        spark.createDataFrame(docs, SPANS_DDL).repartition(1),
-        docs,
-        chunker_type,
-        skew_threshold=8,
-        skew_strategy=skew_strategy,
-    )
+    sdf = spark.createDataFrame(docs, SPANS_DDL).repartition(1)
+    if path == "checkpointed":
+        out = str(tmp_path / "ckpt")
+        run_checkpointed(
+            spark, sdf, out, run_id="nulls", chunker_type=chunker_type, num_buckets=4
+        )
+        chunks = load_chunks(spark, out)
+    else:
+        chunks = chunk_documents(sdf, chunker_type, skew_threshold=8)
+    _assert_spark_equals_driver(chunks, docs, chunker_type)

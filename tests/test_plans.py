@@ -71,7 +71,7 @@ def test_jaccard_prunes_with_broadcast(spark, sf_dir):
 
 
 def test_small_doc_path_has_no_shuffle(spark, sf_dir):
-    """The fused kernel path must not shuffle: filter + mapInPandas
+    """The fused kernel path must not shuffle: filter + mapInArrow
     directly over the source (the explicit corpus repartition is the
     only exchange)."""
     from deepdoc_api_spark.job.pipeline import chunk_documents
@@ -82,7 +82,7 @@ def test_small_doc_path_has_no_shuffle(spark, sf_dir):
     chunks = chunk_documents(spans, "hybrid", skew_threshold=10**9)
     plan = plan_of(chunks)
     # only the giant branch's explicit isolate repartition may exchange;
-    # the small-doc branch is scan -> filter -> MapInPandas, shuffle-free
+    # the small-doc branch is scan -> filter -> MapInArrow, shuffle-free
     exchanges = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan, re.M)
     assert len(exchanges) == 1 and "REPARTITION_BY_NUM" in exchanges[0]
     # round 8: the fused kernel is a mapInArrow node (direct RecordBatch

@@ -166,6 +166,44 @@ def test_streaming_writer_bounded_buffer(spark, sf_dir, tmp_path, monkeypatch):
     spans.unpersist()
 
 
+def test_writer_wall_ms_is_per_bucket(tmp_path):
+    """Each bucket's wall_ms counts its own docs and writes only, so the
+    buckets of one task add up to no more than the task's time. Runs the
+    writer function directly on batches that interleave two buckets."""
+    import time
+
+    import pyarrow as pa
+
+    from deepdoc_api_spark.datagen import doc_id_str, gen_doc_spans
+    from deepdoc_api_spark.job.checkpoint import _writer_kernel
+    from deepdoc_api_spark.job.pipeline import _arrow_schema_of
+    from deepdoc_api_spark.schema import SPANS_SCHEMA
+
+    span_type = _arrow_schema_of(SPANS_SCHEMA).field("spans").type
+    text = "A heading\n\n" + "Body text of a paragraph that goes on. " * 40
+
+    def batch(doc_ids, buckets):
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([doc_id_str(d) for d in doc_ids]),
+                pa.array([gen_doc_spans(d, text) for d in doc_ids], span_type),
+                pa.array(buckets, pa.int32()),
+            ],
+            names=["doc_id", "spans", "bucket"],
+        )
+
+    batches = [batch(range(0, 20), [3, 5] * 10), batch(range(20, 40), [5, 3] * 10)]
+    run = _writer_kernel(str(tmp_path), "w", "snap", "hybrid", 512, 8)
+    t0 = time.monotonic()
+    out = pa.Table.from_batches(list(run(iter(batches)))).to_pylist()
+    elapsed_ms = (time.monotonic() - t0) * 1000
+
+    assert [(r["partition_id"], r["docs"]) for r in out] == [(3, 20), (5, 20)]
+    assert all(r["chunks"] > 0 and r["wall_ms"] >= 0 for r in out)
+    assert sum(r["wall_ms"] for r in out) <= elapsed_ms
+    assert completed_buckets(str(tmp_path), "snap", 8) == [3, 5]
+
+
 def test_resolve_master_respects_launcher():
     """Round-5 deployment fix: get_spark must NOT override a
     spark-submit-provided master — with a pre-launched gateway

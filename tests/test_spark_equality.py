@@ -84,36 +84,23 @@ def test_media_refs_preserved_inline(spark, sf_dir):
 
 
 def test_giant_doc_skew_paths_equal_fused(spark, sf_dir):
-    """Skew paths: the same documents must produce identical chunks via
-    the plain fused kernel, the isolate strategy, and the sharded
-    explode→extract→reassemble strategy."""
+    """The giant branch (every doc isolated on its own task) must
+    produce the same chunks as the plain fused kernel."""
     spans = spans_from_documents(spark, sf_dir, num_partitions=8, limit=10)
     spans.cache()
     key = ["doc_id", "chunk_index", "kind", "text", "media_ref"]
-    fused = sorted(
-        map(
-            tuple,
-            chunk_documents(spans, "hybrid", skew_threshold=10**9)
-            .select(*key)
-            .collect(),
-        )
-    )
-    for strategy in ("isolate", "shard"):
-        got = sorted(
+
+    def run(threshold):
+        return sorted(
             map(
                 tuple,
-                chunk_documents(
-                    spans,
-                    "hybrid",
-                    skew_threshold=1,
-                    shard_spans=64,
-                    skew_strategy=strategy,
-                )
+                chunk_documents(spans, "hybrid", skew_threshold=threshold)
                 .select(*key)
                 .collect(),
             )
         )
-        assert got == fused, strategy
+
+    assert run(1) == run(10**9)
     spans.unpersist()
 
 
