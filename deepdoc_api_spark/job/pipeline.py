@@ -20,6 +20,12 @@ tests/test_spark_equality.py asserts it. The checkpointed job
 (``job/checkpoint.py``) decodes spans and builds chunk batches with the
 same helpers, :func:`_decode` and :func:`_batch_of`.
 
+Every per-row Python kernel of the package (this module's corpus
+generator and chunking stage, the flat-class oracle ops, the fallback
+window op and the media ops) runs through :func:`map_rows`: one
+``mapInArrow`` stage that decodes the named input columns and builds
+each output batch from the stage's DDL.
+
 Reference parity: the reference splits PDFs over 100 pages into parts
 and recombines them (``app/mineru_adapter/layout_processor.py:266-359``
 and ``:24-47``); here a giant document stays whole on one task. One
@@ -35,8 +41,11 @@ from typing import Optional
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
-from ..schema import CHUNK_DDL, CHUNK_SCHEMA, SPANS_DDL, SPANS_SCHEMA
+from ..datagen import doc_id_str, gen_doc_spans
+from ..kernels.pipeline import chunk_document
+from ..schema import CHUNK_DDL, SPANS_DDL
 from .arrow_decode import decode_column
 
 
@@ -62,6 +71,36 @@ def _batch_of(rows: list, schema: pa.Schema) -> pa.RecordBatch:
         [pa.array([r[f.name] for r in rows], type=f.type) for f in schema],
         schema=schema,
     )
+
+
+def _row_kernel(fn, schema: pa.Schema, cols: tuple):
+    """Worker side of :func:`map_rows`: for each Arrow batch, decode
+    ``cols``, call ``fn`` once per input row and emit everything the
+    calls returned as one batch of ``schema``. A batch whose rows
+    return nothing emits no batch."""
+
+    def run(batches):
+        for rb in batches:
+            rows: list = []
+            for values in zip(*_decode(rb, *cols)):
+                rows.extend(fn(*values))
+            if rows:
+                yield _batch_of(rows, schema)
+
+    return run
+
+
+def map_rows(df: DataFrame, fn, ddl: str, *cols: str) -> DataFrame:
+    """Run the per-row kernel ``fn`` over ``df`` as one ``mapInArrow``
+    stage with output schema ``ddl``.
+
+    ``fn`` receives the values of ``cols`` for one input row, decoded
+    by :func:`_decode` (a null ``list<struct>`` arrives as ``None``),
+    and returns that row's output rows as dicts keyed by the ``ddl``
+    column names; other keys are ignored. The DDL is parsed once, when
+    the stage is built."""
+    schema = _arrow_schema_of(_parse_datatype_string(ddl))
+    return df.mapInArrow(_row_kernel(fn, schema, cols), ddl)
 
 
 #: docs with at least this many spans take the giant-doc path. Round-8
@@ -117,36 +156,13 @@ def spans_from_documents(
         num_partitions = spark.sparkContext.defaultParallelism * 4
     docs = docs.repartition(num_partitions, "doc_id")
 
-    # mapInArrow with direct RecordBatch construction (round 8, guide
-    # §4.2): the pandas round-trip serialized every span struct through
-    # an object column on both sides of the worker; building the Arrow
-    # list<struct> array straight from the generator's dicts removes
-    # that transpose (measured 3.1 → 2.4 s noop-isolated at sf0.1×4,
-    # bit-identical rows — the corpus is a pure function of the input).
-    def gen(batches):
-        from deepdoc_api_spark.datagen import doc_id_str, gen_doc_spans
+    def gen(doc_id, text):
+        return [
+            {"doc_id": doc_id_str(did), "spans": gen_doc_spans(did, text or "")}
+            for did in range(doc_id * replicate, (doc_id + 1) * replicate)
+        ]
 
-        schema = _arrow_schema_of(SPANS_SCHEMA)
-        span_type = schema.field(1).type
-        for rb in batches:
-            ids, texts = _decode(rb, "doc_id", "text")
-            out_ids: list = []
-            out_spans: list = []
-            for d, t in zip(ids, texts):
-                for r in range(replicate):
-                    did = int(d) * replicate + r
-                    out_ids.append(doc_id_str(did))
-                    out_spans.append(gen_doc_spans(did, t or ""))
-            if out_ids:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_ids, type=pa.string()),
-                        pa.array(out_spans, type=span_type),
-                    ],
-                    schema=schema,
-                )
-
-    return docs.mapInArrow(gen, SPANS_DDL)
+    return map_rows(docs, gen, SPANS_DDL, "doc_id", "text")
 
 
 def spans_parquet_cached(
@@ -268,42 +284,6 @@ def spans_parquet_cached(
 
 
 # ---------------------------------------------------------------------------
-# fused small-doc kernel
-# ---------------------------------------------------------------------------
-
-
-def _fused_kernel(chunker_type: str, token_budget: int, toc_params=None):
-    """Arrow-native fused kernel (round 8, guide §4.2): spans arrive as
-    one ``list<struct>`` Arrow column and chunk rows leave as a
-    directly-built RecordBatch — the pandas object-column transpose on
-    both sides of the worker is gone (measured ~0.4 s off the flagship
-    at sf0.1×4; chunk values are byte-identical, the kernel itself is
-    untouched). The spans column is decoded child column by child
-    column (:func:`~deepdoc_api_spark.job.arrow_decode.decode_column`),
-    not through ``to_pylist``, whose per-element scalar objects cost
-    ~8x as much; a null span element arrives as an all-``None`` span,
-    which extraction drops and the fallback raw text skips."""
-
-    def run(batches):
-        from deepdoc_api_spark.kernels.pipeline import chunk_document
-
-        schema = _arrow_schema_of(CHUNK_SCHEMA)
-        for rb in batches:
-            rows: list = []
-            for doc_id, s in zip(*_decode(rb, "doc_id", "spans")):
-                rows.extend(
-                    chunk_document(
-                        doc_id, s or [], chunker_type, token_budget,
-                        toc_params=toc_params,
-                    )
-                )
-            if rows:
-                yield _batch_of(rows, schema)
-
-    return run
-
-
-# ---------------------------------------------------------------------------
 # public API
 # ---------------------------------------------------------------------------
 
@@ -337,12 +317,14 @@ def chunk_documents(
     n_parts = spark.sparkContext.defaultParallelism * 2
     src = spans_df.select("doc_id", "spans")
     n_spans = F.size(F.col("spans"))
-    kernel = _fused_kernel(chunker_type, token_budget, toc_params)
 
-    small_chunks = src.filter(n_spans < skew_threshold).mapInArrow(kernel, CHUNK_DDL)
-    giant_chunks = (
-        src.filter(n_spans >= skew_threshold)
-        .repartition(n_parts, "doc_id")
-        .mapInArrow(kernel, CHUNK_DDL)
+    def chunk(doc_id, spans):
+        return chunk_document(
+            doc_id, spans or [], chunker_type, token_budget, toc_params=toc_params
+        )
+
+    small = src.filter(n_spans < skew_threshold)
+    giant = src.filter(n_spans >= skew_threshold).repartition(n_parts, "doc_id")
+    return map_rows(small, chunk, CHUNK_DDL, "doc_id", "spans").unionByName(
+        map_rows(giant, chunk, CHUNK_DDL, "doc_id", "spans")
     )
-    return small_chunks.unionByName(giant_chunks)

@@ -8,10 +8,10 @@ exists on the fallback path (``:2005-2057``). Inputs are truncated to
 the model's token limit with the tokenizer
 (``app/jivas_embeddings.py:39-48``).
 
-The rebuild keeps the *policy* and distributes the *work*: an
-Arrow-batched ``mapInPandas`` stage embeds each partition's chunks in
-client batches (never per-chunk requests), applying the same
-retry/backoff/breaker rules per executor. Failures leave
+The rebuild keeps the *policy* and distributes the *work*: a
+``mapInArrow`` stage embeds each partition's chunks in client batches
+(never per-chunk requests), applying the same retry/backoff/breaker
+rules per executor. Failures leave
 ``embeddings = NULL`` (chunk survives — reference behavior, chunks
 are returned without embeddings on failure).
 
@@ -29,11 +29,13 @@ from __future__ import annotations
 import hashlib
 import math
 import time
-from typing import Iterator, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
+from ..job.pipeline import _arrow_schema_of, _decode
 from ..kernels.tokenizer import truncate_tokens
 
 DEFAULT_DIM = 16
@@ -149,29 +151,25 @@ def attach_embeddings(
     connection/session reuse — vs the reference's per-chunk requests).
     Media chunks (empty text) get NULL embeddings.
     """
-    out_ddl = ", ".join(
-        f"{name} {dtype}"
-        for name, dtype in zip(
-            chunks_df.schema.fieldNames(),
-            [f.dataType.simpleString() for f in chunks_df.schema.fields],
-        )
-    ) + ", embeddings array<float>"
-    cols = chunks_df.schema.fieldNames()
+    # a new field list: ``schema.add`` would append to the list that
+    # chunks_df's cached schema holds
+    out = StructType(
+        chunks_df.schema.fields + [StructField("embeddings", ArrayType(FloatType()))]
+    )
+    schema = _arrow_schema_of(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         client = client_factory()
-        for pdf in batches:
-            mask = pdf["text"].fillna("").str.len() > 0
-            texts = pdf.loc[mask, "text"].tolist()
-            vecs = _embed_partition_batches(texts, client, batch_size)
-            col: List[Optional[List[float]]] = [None] * len(pdf)
-            vi = 0
-            for pos, m in enumerate(mask.tolist()):
-                if m:
-                    col[pos] = vecs[vi]
-                    vi += 1
-            pdf = pdf.copy()
-            pdf["embeddings"] = col
-            yield pdf
+        for rb in batches:
+            (texts,) = _decode(rb, "text")
+            keep = [i for i, t in enumerate(texts) if t]
+            vecs = _embed_partition_batches(
+                [texts[i] for i in keep], client, batch_size
+            )
+            col: List[Optional[List[float]]] = [None] * rb.num_rows
+            for i, v in zip(keep, vecs):
+                col[i] = v
+            emb = pa.array(col, type=schema.field("embeddings").type)
+            yield pa.RecordBatch.from_arrays(rb.columns + [emb], schema=schema)
 
-    return chunks_df.mapInPandas(run, out_ddl)
+    return chunks_df.mapInArrow(run, out)

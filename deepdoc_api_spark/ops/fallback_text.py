@@ -23,13 +23,16 @@ characters and character offsets agree byte-for-byte (unicode
 whitespace would diverge; documented limit).
 
 Scale note: one row in → ~N/900 rows out, computed entirely inside one
-``mapInArrow`` crossing with no shuffle — the scan partitioning is the
-output partitioning.
+``map_rows`` stage (one ``mapInArrow`` crossing) with no shuffle — the
+scan partitioning is the output partitioning.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..job.pipeline import map_rows
+from ..kernels.chunkers import fallback_chunks
 
 REPLICAS = 9
 
@@ -50,47 +53,14 @@ def fallback_window_chunks(
         .repartition(n, "doc_id")
     )
 
-    # round 8: arrow-native wrapper (same shape as the flagship fused
-    # kernel) — the K5 kernel itself is untouched; rows leave as a
-    # directly-built RecordBatch instead of a pandas frame
-    def run(batches):
-        import pyarrow as pa
+    def windows(doc_id, text):
+        content = " ".join([text or ""] * replicas)
+        return [
+            dict(ch, doc_id=doc_id, chunk_index=i, chunk_size=len(ch["text"]))
+            for i, ch in enumerate(fallback_chunks(content))
+        ]
 
-        from deepdoc_api_spark.job.arrow_decode import decode_column
-        from deepdoc_api_spark.kernels.chunkers import fallback_chunks
-
-        for rb in batches:
-            ids = decode_column(rb.column(rb.schema.get_field_index("doc_id")))
-            texts = decode_column(rb.column(rb.schema.get_field_index("text")))
-            o_id: list = []
-            o_idx: list = []
-            o_txt: list = []
-            o_sz: list = []
-            o_ov: list = []
-            for doc_id, text in zip(ids, texts):
-                content = " ".join([text or ""] * replicas)
-                for i, ch in enumerate(fallback_chunks(content)):
-                    o_id.append(doc_id)
-                    o_idx.append(i)
-                    o_txt.append(ch["text"])
-                    o_sz.append(len(ch["text"]))
-                    o_ov.append(int(ch["chunk_overlap"]))
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_id, type=pa.int64()),
-                        pa.array(o_idx, type=pa.int32()),
-                        pa.array(o_txt, type=pa.string()),
-                        pa.array(o_sz, type=pa.int64()),
-                        pa.array(o_ov, type=pa.int32()),
-                    ],
-                    names=[
-                        "doc_id", "chunk_index", "text",
-                        "chunk_size", "chunk_overlap",
-                    ],
-                )
-
-    return docs.mapInArrow(run, FALLBACK_WINDOW_DDL)
+    return map_rows(docs, windows, FALLBACK_WINDOW_DDL, "doc_id", "text")
 
 
 def fallback_window_chunks_sql(

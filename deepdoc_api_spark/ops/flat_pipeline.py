@@ -22,10 +22,11 @@ in Spark SQL and DuckDB SQL. On that class:
   range labels).
 
 The Spark side runs the REAL kernels (``hierarchical_chunks`` /
-``format_records → mineru_chunks`` / ``assemble_chunks``) via
-``mapInPandas``; the DuckDB oracle re-derives the same output
-relationally — an independent re-implementation, so a hash match
-certifies the fold semantics themselves (reference:
+``format_records → mineru_chunks`` / ``assemble_chunks``), each in one
+Arrow stage (:func:`~deepdoc_api_spark.job.pipeline.map_rows`); the
+DuckDB oracle re-derives the same output relationally — an
+independent re-implementation, so a hash match certifies the fold
+semantics themselves (reference:
 ``/root/reference/app/mineru_adapter/layout_processor.py:131-176``,
 ``app/processing.py:985-1023,1543-1589``).
 
@@ -46,10 +47,21 @@ Generator spec (shared; all arithmetic on the group index ``i``):
 
 from __future__ import annotations
 
-from typing import Iterator
+import json
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from ..job.pipeline import map_rows
+from ..kernels.chunkers import (
+    assemble_chunks,
+    hierarchical_chunks,
+    hybrid_chunks,
+    mineru_chunks,
+)
+from ..kernels.html_extract import extract_html_blocks
+from ..kernels.layout import extract_records, sort_reading_order
+from ..kernels.pipeline import chunk_document
+from ..kernels.toc import toc_chunks
 
 GROUP_WORDS = 8
 
@@ -121,19 +133,33 @@ MINERU_FLAT_DDL = (
 )
 
 
-def _records_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, recs) — the flat-title record stream, generated with
-    JVM-side expressions only (no Python in the generation plan)."""
+def _words(spark: SparkSession, sf_dir: str, replicas: int = REPLICAS) -> DataFrame:
+    """(doc_id, ws) — the Spark word source of every flat class: each
+    document's trimmed text, ``replicas`` copies joined by a space,
+    split on whitespace, minus the tokens holding whitespace only
+    Python splits on (:data:`_EXOTIC_WS_CLASS`). JVM-side expressions
+    only; the DuckDB twins are the ``w AS (...)`` CTEs."""
     n = spark.sparkContext.defaultParallelism * 2
-    docs = (
+    rep = " || ' ' || ".join(["trim(text)"] * replicas)
+    return (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
         .select("doc_id", "text")
         .repartition(n, "doc_id")
+        .selectExpr(
+            "doc_id",
+            f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws",
+        )
     )
-    rep = " || ' ' || ".join(["trim(text)"] * REPLICAS)
-    return docs.selectExpr(
-        "doc_id", f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
+
+
+def _pages_json(pages) -> str:
+    return json.dumps(pages, separators=(",", ":"))
+
+
+def _records_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, recs) — the flat-title record stream, generated with
+    JVM-side expressions only (no Python in the generation plan)."""
+    return _words(spark, sf_dir).selectExpr(
         "doc_id",
         f"""
         transform(if(size(ws) > 0, sequence(0, cast(ceil(size(ws) / {GROUP_WORDS}.0) as int) - 1), array()),
@@ -178,6 +204,8 @@ r AS (
 
 
 def _to_kernel_records(recs) -> list:
+    """A decoded ``recs`` value (``None`` for a null list) as the
+    kernels' record dicts."""
     return [
         {
             "kind": r["kind"],
@@ -186,7 +214,7 @@ def _to_kernel_records(recs) -> list:
             "page": int(r["page"]),
             "offset": int(r["seq"]),
         }
-        for r in recs
+        for r in recs or ()
     ]
 
 
@@ -196,43 +224,24 @@ def _to_kernel_records(recs) -> list:
 
 
 def hierarchical_flat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs_df = _records_spark(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoc_api_spark.kernels.chunkers import (
-            assemble_chunks,
-            hierarchical_chunks,
+    def rows(doc_id, recs):
+        records = _to_kernel_records(recs)
+        chunks = assemble_chunks(
+            str(doc_id), hierarchical_chunks(records), "hierarchical"
         )
+        return [
+            dict(
+                ch,
+                doc_id=doc_id,
+                heading=ch["headings"][-1] if ch["headings"] else None,
+                page=int(ch["pages"][0]),
+            )
+            for ch in chunks
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, recs in zip(pdf["doc_id"], pdf["recs"]):
-                records = _to_kernel_records(recs if recs is not None else [])
-                chunks = assemble_chunks(
-                    str(doc_id), hierarchical_chunks(records), "hierarchical"
-                )
-                for ch in chunks:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chunk_index"],
-                            ch["kind"],
-                            ch["text"],
-                            (ch["headings"] or [None])[-1] if ch["headings"] else None,
-                            int(ch["pages"][0]),
-                            ch["chunk_size"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "chunk_index", "kind", "text",
-                        "heading", "page", "chunk_size",
-                    ],
-                )
-
-    return recs_df.mapInPandas(run, HIER_FLAT_DDL)
+    return map_rows(
+        _records_spark(spark, sf_dir), rows, HIER_FLAT_DDL, "doc_id", "recs"
+    )
 
 
 HIERARCHICAL_FLAT_SQL = f"""
@@ -263,43 +272,26 @@ FROM h WHERE kind = 'text'
 # ---------------------------------------------------------------------------
 
 
+def _mineru_flat_row(doc_id: int, ch: dict) -> dict:
+    return dict(
+        ch,
+        doc_id=doc_id,
+        hierarchy=" >> ".join(ch["hierarchy"] or []),
+        pages=_pages_json(ch["pages"]),
+    )
+
+
 def mineru_flat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs_df = _records_spark(spark, sf_dir)
+    def rows(doc_id, recs):
+        records = _to_kernel_records(recs)
+        chunks = assemble_chunks(
+            str(doc_id), mineru_chunks(records, str(doc_id)), "mineru"
+        )
+        return [_mineru_flat_row(doc_id, ch) for ch in chunks]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-
-        from deepdoc_api_spark.kernels.chunkers import assemble_chunks, mineru_chunks
-
-        for pdf in batches:
-            rows = []
-            for doc_id, recs in zip(pdf["doc_id"], pdf["recs"]):
-                records = _to_kernel_records(recs if recs is not None else [])
-                chunks = assemble_chunks(
-                    str(doc_id), mineru_chunks(records, str(doc_id)), "mineru"
-                )
-                for ch in chunks:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chunk_index"],
-                            ch["kind"],
-                            ch["text"],
-                            " >> ".join(ch["hierarchy"] or []),
-                            json.dumps(ch["pages"], separators=(",", ":")),
-                            ch["chunk_size"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "chunk_index", "kind", "text",
-                        "hierarchy", "pages", "chunk_size",
-                    ],
-                )
-
-    return recs_df.mapInPandas(run, MINERU_FLAT_DDL)
+    return map_rows(
+        _records_spark(spark, sf_dir), rows, MINERU_FLAT_DDL, "doc_id", "recs"
+    )
 
 
 MINERU_FLAT_SQL = f"""
@@ -393,16 +385,7 @@ TOC_FLAT_DDL = (
 
 
 def _toc_records_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
-    rep = " || ' ' || ".join(["trim(text)"] * REPLICAS)
-    return docs.selectExpr(
-        "doc_id", f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
+    return _words(spark, sf_dir).selectExpr(
         "doc_id",
         f"""
         transform(if(size(ws) > 0, sequence(0, cast(ceil(size(ws) / {GROUP_WORDS}.0) as int) - 1), array()),
@@ -442,38 +425,22 @@ r AS (
 
 
 def toc_flat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs_df = _toc_records_spark(spark, sf_dir)
+    def rows(doc_id, recs):
+        records = _to_kernel_records(recs)
+        chunks = assemble_chunks(str(doc_id), toc_chunks(records), "toc")
+        return [
+            dict(
+                ch,
+                doc_id=doc_id,
+                heading=(ch["headings"] or [None])[0],
+                page=int(ch["pages"][0]),
+            )
+            for ch in chunks
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoc_api_spark.kernels.chunkers import assemble_chunks
-        from deepdoc_api_spark.kernels.toc import toc_chunks
-
-        for pdf in batches:
-            rows = []
-            for doc_id, recs in zip(pdf["doc_id"], pdf["recs"]):
-                records = _to_kernel_records(recs if recs is not None else [])
-                chunks = assemble_chunks(str(doc_id), toc_chunks(records), "toc")
-                for ch in chunks:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chunk_index"],
-                            ch["text"],
-                            (ch["headings"] or [None])[0],
-                            int(ch["pages"][0]),
-                            ch["chunk_size"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "chunk_index", "text", "heading",
-                        "page", "chunk_size",
-                    ],
-                )
-
-    return recs_df.mapInPandas(run, TOC_FLAT_DDL)
+    return map_rows(
+        _toc_records_spark(spark, sf_dir), rows, TOC_FLAT_DDL, "doc_id", "recs"
+    )
 
 
 TOC_FLAT_SQL = f"""
@@ -529,19 +496,10 @@ _GLEN_PARTIAL = [0, 4, 9, 15, 22, 30, 39]  # prefix sums of 4+(i%7), period 49
 
 
 def _hybrid_records_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
-    rep = " || ' ' || ".join(["trim(text)"] * REPLICAS)
     partial = ",".join(str(v) for v in _GLEN_PARTIAL)
     start = f"(49 * (i div 7) + element_at(array({partial}), (i % 7) + 1))"
     glen = "(4 + i % 7)"
-    return docs.selectExpr(
-        "doc_id", f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
+    return _words(spark, sf_dir).selectExpr(
         "doc_id",
         f"""
         transform(
@@ -561,43 +519,28 @@ def _hybrid_records_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hybrid_flat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs_df = _hybrid_records_spark(spark, sf_dir)
+    def rows(doc_id, recs):
+        records = _to_kernel_records(recs)
+        chunks = assemble_chunks(
+            str(doc_id), hybrid_chunks(records, budget=HYBRID_FLAT_BUDGET), "hybrid"
+        )
+        return [
+            dict(
+                ch,
+                doc_id=doc_id,
+                heading=(ch["headings"] or [None])[0],
+                pages=_pages_json(ch["pages"]),
+            )
+            for ch in chunks
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-
-        from deepdoc_api_spark.kernels.chunkers import assemble_chunks, hybrid_chunks
-
-        for pdf in batches:
-            rows = []
-            for doc_id, recs in zip(pdf["doc_id"], pdf["recs"]):
-                records = _to_kernel_records(recs if recs is not None else [])
-                chunks = assemble_chunks(
-                    str(doc_id),
-                    hybrid_chunks(records, budget=HYBRID_FLAT_BUDGET),
-                    "hybrid",
-                )
-                for ch in chunks:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chunk_index"],
-                            ch["text"],
-                            (ch["headings"] or [None])[0],
-                            json.dumps(ch["pages"], separators=(",", ":")),
-                            ch["chunk_size"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "chunk_index", "text", "heading",
-                        "pages", "chunk_size",
-                    ],
-                )
-
-    return recs_df.mapInPandas(run, TOC_FLAT_DDL.replace("page int", "pages string"))
+    return map_rows(
+        _hybrid_records_spark(spark, sf_dir),
+        rows,
+        TOC_FLAT_DDL.replace("page int", "pages string"),
+        "doc_id",
+        "recs",
+    )
 
 
 def _hybrid_flat_sql(budget: int = HYBRID_FLAT_BUDGET) -> str:
@@ -753,17 +696,8 @@ def _html_fragment_expr(start: str, glen: str) -> str:
 
 
 def html_flat_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
-    rep = " || ' ' || ".join(["trim(text)"] * REPLICAS)
     start = f"(i * {GROUP_WORDS})"
-    html_df = docs.selectExpr(
-        "doc_id", f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
+    html_df = _words(spark, sf_dir).selectExpr(
         "doc_id",
         f"""
         concat_ws('', transform(
@@ -774,23 +708,13 @@ def html_flat_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoc_api_spark.kernels.html_extract import extract_html_blocks
+    def rows(doc_id, html):
+        return [
+            dict(blk, doc_id=doc_id, block_index=j)
+            for j, blk in enumerate(extract_html_blocks(html or ""))
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                for j, blk in enumerate(extract_html_blocks(html or "")):
-                    rows.append(
-                        (int(doc_id), j, blk["kind"], blk["text"], blk["media_ref"])
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["doc_id", "block_index", "kind", "text", "media_ref"],
-                )
-
-    return html_df.mapInPandas(run, HTML_FLAT_DDL)
+    return map_rows(html_df, rows, HTML_FLAT_DDL, "doc_id", "html")
 
 
 def _html_flat_sql(min_text_chars: int = 25) -> str:
@@ -866,17 +790,8 @@ MIXED_FLAT_DDL = (
 
 
 def _mixed_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
-    rep = " || ' ' || ".join(["trim(text)"] * REPLICAS)
     grp = f"concat_ws(' ', slice(ws, i * {GROUP_WORDS} + 1, {GROUP_WORDS}))"
-    return docs.selectExpr(
-        "doc_id", f"filter(split({rep}, '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
+    return _words(spark, sf_dir).selectExpr(
         "doc_id",
         f"""
         transform(if(size(ws) > 0, sequence(0, cast(ceil(size(ws) / {GROUP_WORDS}.0) as int) - 1), array()),
@@ -904,44 +819,13 @@ def _mixed_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mineru_flat_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spans_df = _mixed_spans_spark(spark, sf_dir)
+    def rows(doc_id, spans):
+        chunks = chunk_document(str(doc_id), spans or [], "mineru")
+        return [_mineru_flat_row(doc_id, ch) for ch in chunks]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-
-        from deepdoc_api_spark.kernels.pipeline import chunk_document
-
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                chunks = chunk_document(
-                    str(doc_id),
-                    [dict(s) for s in (spans if spans is not None else [])],
-                    "mineru",
-                )
-                for ch in chunks:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chunk_index"],
-                            ch["kind"],
-                            ch["text"],
-                            " >> ".join(ch["hierarchy"] or []),
-                            json.dumps(ch["pages"], separators=(",", ":")),
-                            ch["media_ref"],
-                            ch["chunk_size"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "chunk_index", "kind", "text",
-                        "hierarchy", "pages", "media_ref", "chunk_size",
-                    ],
-                )
-
-    return spans_df.mapInPandas(run, MIXED_FLAT_DDL)
+    return map_rows(
+        _mixed_spans_spark(spark, sf_dir), rows, MIXED_FLAT_DDL, "doc_id", "spans"
+    )
 
 
 def _mixed_flat_sql() -> str:
@@ -1077,22 +961,12 @@ def mixed_record_kind_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept stream by index arithmetic."""
     from pyspark.sql import functions as F
 
-    spans_df = _mixed_spans_spark(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoc_api_spark.kernels.layout import extract_records
-
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                for rec in extract_records(
-                    [dict(s) for s in (spans if spans is not None else [])]
-                ):
-                    rows.append((rec["kind"],))
-            if rows:
-                yield pd.DataFrame(rows, columns=["kind"])
-
-    recs = spans_df.mapInPandas(run, "kind string")
+    recs = map_rows(
+        _mixed_spans_spark(spark, sf_dir),
+        lambda spans: extract_records(spans or []),
+        "kind string",
+        "spans",
+    )
     return (
         recs.groupBy("kind")
         .agg(F.count("*").alias("n_records"))
@@ -1128,7 +1002,7 @@ MIXED_KIND_HISTOGRAM_SQL = _mixed_kind_histogram_sql()
 # aspect-fit resize geometry, the frame-sampling schedule — is pure
 # md5 + integer/double arithmetic that DuckDB can re-derive. These two
 # queries run the REAL ops (media_catalog → resize_media /
-# sample_frames, Arrow-batched mapInPandas) over a media-only flat span
+# sample_frames, one map_rows stage each) over a media-only flat span
 # class (ref = 'm://{doc}/{i}.{png|mp4|wav}' by i % 3) and verify
 # value-exactly. Only the raw pixel/sample decode remains rows-only.
 
@@ -1145,19 +1019,11 @@ _EXTS = ("png", "mp4", "wav")
 
 
 def _media_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
     ext = (
         "element_at(array('png','mp4','wav'), cast(i % 3 as int) + 1)"
     )
-    return docs.selectExpr(
-        "cast(doc_id as string) as doc_id", f"filter(split(trim(text), '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
-        "doc_id",
+    return _words(spark, sf_dir, replicas=1).selectExpr(
+        "cast(doc_id as string) as doc_id",
         f"""
         transform(if(size(ws) > 0, sequence(0, cast(ceil(size(ws) / {GROUP_WORDS}.0) as int) - 1), array()),
           i -> named_struct(
@@ -1381,17 +1247,9 @@ FROM chunks c JOIN keepers k USING (fp)
 
 
 def reading_order_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
-    docs = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n, "doc_id")
-    )
     grp = f"concat_ws(' ', slice(ws, i * {GROUP_WORDS} + 1, {GROUP_WORDS}))"
-    spans_df = docs.selectExpr(
-        "cast(doc_id as string) as doc_id", f"filter(split(trim(text), '\\\\s+'), x -> x != '' and not (x rlike '{_EXOTIC_WS_JAVA}')) as ws"
-    ).selectExpr(
-        "doc_id",
+    spans_df = _words(spark, sf_dir, replicas=1).selectExpr(
+        "cast(doc_id as string) as doc_id",
         # scrambled interleave: all i % 3 == 0 groups first, then 1, 2
         f"""
         transform(
@@ -1410,30 +1268,16 @@ def reading_order_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoc_api_spark.kernels.layout import (
-            extract_records,
-            sort_reading_order,
-        )
+    def rows(doc_id, spans):
+        recs = sort_reading_order(extract_records(spans or []))
+        return [dict(r, doc_id=doc_id, position=i) for i, r in enumerate(recs)]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                recs = extract_records(
-                    [dict(s) for s in (spans if spans is not None else [])]
-                )
-                for pos, rec in enumerate(sort_reading_order(recs)):
-                    rows.append(
-                        (doc_id, pos, rec["offset"], rec["page"], rec["content"])
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["doc_id", "position", "offset", "page", "content"],
-                )
-
-    return spans_df.mapInPandas(
-        run, "doc_id string, position int, offset int, page int, content string"
+    return map_rows(
+        spans_df,
+        rows,
+        "doc_id string, position int, offset int, page int, content string",
+        "doc_id",
+        "spans",
     )
 
 

@@ -7,13 +7,13 @@ decode / feature-extract plumbing a training-data pipeline needs:
 
 * :func:`media_catalog` — the media table derived from the span corpus
   (doc_id, media_ref, media_kind, payload, size), all Spark-side;
-* :func:`extract_media_features` — Arrow-batched ``mapInPandas``
-  feature extraction. The actual pixel/sample decode REQUIRES codec
-  libraries (Pillow/ffmpeg) that are NOT in this environment, so the
-  decode step is STUBBED: :func:`decode_media` raises
-  ``NotImplementedError`` unless ``fake=True``, in which case a
-  deterministic fake decoder (seeded by the payload hash) produces
-  stable dimensions/features. The Spark-side plumbing — schema,
+* :func:`extract_media_features` — feature extraction in one Arrow
+  stage (:func:`~deepdoc_api_spark.job.pipeline.map_rows`). The actual
+  pixel/sample decode REQUIRES codec libraries (Pillow/ffmpeg) that are
+  NOT in this environment, so the decode step is STUBBED:
+  :func:`decode_media` raises ``NotImplementedError`` unless
+  ``fake=True``, in which case a deterministic fake decoder (seeded by
+  the payload hash) produces stable dimensions/features. The Spark-side plumbing — schema,
   partitioning, UDF signature, Arrow batch shape — is real and tested;
   swapping in a real decoder changes only the body of
   :func:`decode_media`.
@@ -23,11 +23,11 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..job.pipeline import map_rows
 
 MEDIA_KINDS = {
     "png": "image", "jpg": "image", "gif": "image",
@@ -90,50 +90,42 @@ def decode_media(payload: bytes, media_kind: str, fake: bool = False):
             "install them and replace this stub"
         )
     h = hashlib.md5(payload or b"").digest()
-    width = 64 + h[0] * 4
-    height = 64 + h[1] * 4
-    # floor-micro, not round(…, 6): floor is identical in both engines,
-    # so the feature arithmetic is re-derivable by the external oracle
-    feature = [
+    return 64 + h[0] * 4, 64 + h[1] * 4, _stub_feature(h)
+
+
+def _stub_feature(h: bytes) -> list:
+    """The stub feature vector of digest ``h`` — floor-micro, not
+    round(…, 6): floor is identical in both engines, so the feature
+    arithmetic is re-derivable by the external oracle (Python round()
+    banker's-rounds)."""
+    return [
         math.floor((h[i % len(h)] - 128) / 128.0 * 1000000.0) / 1000000.0
         for i in range(FEATURE_DIM)
     ]
-    return width, height, feature
 
 
 def extract_media_features(
     media_df: DataFrame, fake_decode: bool = True
 ) -> DataFrame:
-    """Arrow-batched feature extraction over the media table.
-
-    ``mapInPandas`` — one Python crossing per Arrow batch, never per
-    row; the batch shape (pdf of N rows with a binary column) is what a
-    real image decoder would receive.
+    """Feature extraction over the media table in one Arrow stage — one
+    Python crossing per Arrow batch, never per row; the batch (N rows
+    with a binary payload column) is what a real image decoder would
+    receive.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, kind, payload, n_bytes in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_kind"],
-                pdf["payload"], pdf["n_bytes"],
-            ):
-                w, hgt, feat = decode_media(
-                    bytes(payload) if payload is not None else b"",
-                    kind,
-                    fake=fake_decode,
-                )
-                rows.append((doc_id, ref, kind, w, hgt, int(n_bytes), feat))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "media_ref", "media_kind", "width",
-                        "height", "n_bytes", "feature",
-                    ],
-                )
+    def rows(doc_id, ref, kind, payload, n_bytes):
+        w, hgt, feat = decode_media(payload or b"", kind, fake=fake_decode)
+        return [
+            {
+                "doc_id": doc_id, "media_ref": ref, "media_kind": kind,
+                "width": w, "height": hgt, "n_bytes": n_bytes, "feature": feat,
+            }
+        ]
 
-    return media_df.mapInPandas(run, MEDIA_FEATURES_DDL)
+    return map_rows(
+        media_df, rows, MEDIA_FEATURES_DDL,
+        "doc_id", "media_ref", "media_kind", "payload", "n_bytes",
+    )
 
 
 def media_kind_histogram(spans_df: DataFrame) -> DataFrame:
@@ -180,28 +172,20 @@ def resize_media(
     One Arrow crossing; the pixel resample slot is inside the same
     batch loop a real implementation fills in."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, kind, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_kind"], pdf["payload"]
-            ):
-                w, hgt, _feat = decode_media(
-                    bytes(payload) if payload is not None else b"",
-                    kind, fake=fake_decode,
-                )
-                rw, rh, sm = fit_box(w, hgt, max_w, max_h)
-                rows.append((doc_id, ref, kind, w, hgt, rw, rh, sm))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "media_ref", "media_kind", "width",
-                        "height", "resized_w", "resized_h", "scale_milli",
-                    ],
-                )
+    def rows(doc_id, ref, kind, payload):
+        w, hgt, _feat = decode_media(payload or b"", kind, fake=fake_decode)
+        rw, rh, sm = fit_box(w, hgt, max_w, max_h)
+        return [
+            {
+                "doc_id": doc_id, "media_ref": ref, "media_kind": kind,
+                "width": w, "height": hgt,
+                "resized_w": rw, "resized_h": rh, "scale_milli": sm,
+            }
+        ]
 
-    return media_df.mapInPandas(run, RESIZED_DDL)
+    return map_rows(
+        media_df, rows, RESIZED_DDL, "doc_id", "media_ref", "media_kind", "payload"
+    )
 
 
 def frame_timestamps_ms(duration_ms: int, every_ms: int):
@@ -221,42 +205,25 @@ def sample_frames(
     are stub-derived from the payload hash (decode is codec work);
     the schedule arithmetic and the fan-out plumbing are real."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import math as _math
+    def rows(doc_id, ref, kind, payload):
+        if kind != "video":
+            return []
+        if not fake_decode:
+            decode_media(b"", kind, fake=False)  # raises: stub
+        h = hashlib.md5(payload or b"").digest()
+        duration_ms = 1000 + int.from_bytes(h[:2], "big") * 2
+        return [
+            {
+                "doc_id": doc_id, "media_ref": ref, "frame_idx": idx,
+                "ts_ms": ts,
+                # one derivation contract for every stub feature
+                "frame_feature": _stub_feature(
+                    hashlib.md5(h + ts.to_bytes(8, "big")).digest()
+                ),
+            }
+            for idx, ts in enumerate(frame_timestamps_ms(duration_ms, every_ms))
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, kind, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_kind"], pdf["payload"]
-            ):
-                if kind != "video":
-                    continue
-                if not fake_decode:
-                    decode_media(b"", kind, fake=False)  # raises: stub
-                h = _hashlib.md5(bytes(payload or b"")).digest()
-                duration_ms = 1000 + int.from_bytes(h[:2], "big") * 2
-                for idx, ts in enumerate(frame_timestamps_ms(duration_ms, every_ms)):
-                    fh = _hashlib.md5(h + ts.to_bytes(8, "big")).digest()
-                    # floor-micro like decode_media (round-3 ADVICE):
-                    # one derivation contract for every stub feature,
-                    # DuckDB-re-derivable if frame features are ever
-                    # value-checked (round() banker's-rounds)
-                    feat = [
-                        _math.floor(
-                            (fh[i % len(fh)] - 128) / 128.0 * 1000000.0
-                        )
-                        / 1000000.0
-                        for i in range(FEATURE_DIM)
-                    ]
-                    rows.append((doc_id, ref, idx, ts, feat))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "media_ref", "frame_idx", "ts_ms",
-                        "frame_feature",
-                    ],
-                )
-
-    return media_df.mapInPandas(run, FRAMES_DDL)
+    return map_rows(
+        media_df, rows, FRAMES_DDL, "doc_id", "media_ref", "media_kind", "payload"
+    )

@@ -214,6 +214,7 @@ def test_reader_plan_is_jvm_only(spark, tmp_path):
         .toString()
     )
     assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "MapInArrow" not in plan
 
 
 def test_overflow_page_keeps_reading_order(spark, tmp_path):

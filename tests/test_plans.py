@@ -100,6 +100,7 @@ def test_quality_score_stays_in_codegen(spark, sf_dir):
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
     assert "ArrowEvalPython" not in plan  # no pandas UDFs either
     assert "MapInPandas" not in plan
+    assert "MapInArrow" not in plan
     assert "Project" in plan  # expressions, not opaque functions
 
 
@@ -244,11 +245,15 @@ def test_flat_oracle_generation_stays_jvm_side(spark, sf_dir):
     for fn in (
         flat_pipeline.hierarchical_flat_chunks,
         flat_pipeline.mineru_flat_chunks,
+        flat_pipeline.toc_flat_chunks,
         flat_pipeline.hybrid_flat_chunks,
         flat_pipeline.html_flat_blocks,
+        flat_pipeline.mineru_flat_mixed,
+        flat_pipeline.mixed_record_kind_histogram,
+        flat_pipeline.reading_order_flat,
     ):
         plan = plan_of(fn(spark, sf_dir))
-        n = len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M))
+        n = len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M))
         assert n == 1, f"{fn.__name__}: {n} Arrow crossings"
         scan = [seg for seg in plan.split("\n\n") if "ReadSchema" in seg][0]
         assert "lang" not in scan and "n_chars" not in scan, (
@@ -414,6 +419,7 @@ def test_new_round3_ops_plan_shapes(spark, sf_dir):
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
         assert "MapInPandas" not in plan
+        assert "MapInArrow" not in plan
 
 
 def test_ivf_assign_has_no_window_and_no_fanout(spark, sf_dir):
@@ -803,6 +809,7 @@ def test_round6_new_ops_plan_shapes(spark, sf_dir):
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
         assert "MapInPandas" not in plan
+        assert "MapInArrow" not in plan
         assert "CartesianProduct" not in plan
 
 

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Driver-side profiling of the flagship Python kernel (guide §1):
-splits per-doc cost into (a) datagen span generation, (b) the frozen
-chunk_document kernel, (c) pandas-DataFrame construction from the
-kernel's row dicts, (d) pandas->Arrow conversion — the (c)+(d) share is
-the optimizable wrapper overhead in job/pipeline.py (the kernels and
-datagen are oracle-frozen this round).
+splits per-doc cost into (a) datagen span generation, (b) the chunk
+kernel ``chunk_document``, and the Arrow steps the shipped stages take
+around them: the span list -> ``list<struct>`` build of corpus
+generation, the column-wise span decode
+(``job.arrow_decode.decode_column``) and the chunk RecordBatch build
+(``job.pipeline._batch_of``).
 
 Run: python tools/profile_kernel.py [n_docs]
 """
@@ -18,15 +19,16 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 
 def main(n_docs: int = 2000) -> None:
     from deepdoc_api_spark.datagen import doc_id_str, gen_doc_spans
+    from deepdoc_api_spark.job.arrow_decode import decode_column
+    from deepdoc_api_spark.job.pipeline import _arrow_schema_of, _batch_of
     from deepdoc_api_spark.kernels.pipeline import chunk_document
-    from deepdoc_api_spark.schema import CHUNK_COLUMNS
+    from deepdoc_api_spark.schema import CHUNK_SCHEMA, SPANS_SCHEMA
 
     tbl = pq.read_table(
         "/root/testdata/sf0.1/documents.parquet", columns=["doc_id", "text"]
@@ -43,96 +45,35 @@ def main(n_docs: int = 2000) -> None:
     t_gen = time.monotonic() - t0
     n_spans = sum(len(s) for _, s in spans_all)
 
-    # datagen -> pandas -> arrow conversion (the corpus_gen wrapper cost)
+    # span lists -> Arrow list<struct> (corpus generation's output build)
+    span_type = _arrow_schema_of(SPANS_SCHEMA).field("spans").type
     t0 = time.monotonic()
-    pdf_spans = pd.DataFrame(spans_all, columns=["doc_id", "spans"])
-    t_span_pdf = time.monotonic() - t0
-    t0 = time.monotonic()
-    span_type = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
-    arr = pa.Array.from_pandas(pdf_spans["spans"], type=span_type)
+    arr = pa.array([s for _, s in spans_all], type=span_type)
     t_span_arrow = time.monotonic() - t0
 
-    # (b) the frozen kernel
+    # Arrow -> span dicts (the chunking stage's input decode)
+    t0 = time.monotonic()
+    decoded = decode_column(arr)
+    t_decode = time.monotonic() - t0
+
+    # (b) the kernel
     t0 = time.monotonic()
     rows = []
-    for ds, spans in spans_all:
+    for (ds, _), spans in zip(spans_all, decoded):
         rows.extend(chunk_document(ds, spans, "hybrid", 512))
     t_kernel = time.monotonic() - t0
 
-    # (c) pandas DataFrame from list-of-dicts (current _fused_kernel)
+    # chunk row dicts -> RecordBatch (the chunking stage's output build)
     t0 = time.monotonic()
-    pdf = pd.DataFrame(rows, columns=CHUNK_COLUMNS)
-    t_pdf = time.monotonic() - t0
-
-    # (c') columnar construction alternative
-    t0 = time.monotonic()
-    cols = {c: [r[c] for r in rows] for c in CHUNK_COLUMNS}
-    pdf2 = pd.DataFrame(cols, columns=CHUNK_COLUMNS)
-    t_pdf_cols = time.monotonic() - t0
-
-    # (d) pandas -> Arrow (what Spark's serializer pays per batch)
-    chunk_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("chunk_id", pa.string()),
-            ("chunk_index", pa.int32()),
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("pages", pa.list_(pa.int32())),
-            ("hierarchy", pa.list_(pa.string())),
-            ("headings", pa.list_(pa.string())),
-            ("chunker_type", pa.string()),
-            ("chunk_size", pa.int32()),
-            ("chunk_overlap", pa.int32()),
-            (
-                "bbox",
-                pa.struct(
-                    [
-                        ("left", pa.float64()),
-                        ("top", pa.float64()),
-                        ("right", pa.float64()),
-                        ("bottom", pa.float64()),
-                        ("width", pa.float64()),
-                        ("height", pa.float64()),
-                        ("area", pa.float64()),
-                    ]
-                ),
-            ),
-            ("extractor_used", pa.string()),
-        ]
-    )
-    present = [f for f in chunk_schema if f.name in CHUNK_COLUMNS]
-    t0 = time.monotonic()
-    arrs = [
-        pa.Array.from_pandas(pdf[f.name], type=f.type)
-        for f in present
-    ]
-    t_arrow = time.monotonic() - t0
-
-    # (d') direct python-list -> Arrow
-    t0 = time.monotonic()
-    arrs2 = [pa.array(cols[f.name], type=f.type) for f in present]
-    t_arrow_direct = time.monotonic() - t0
+    _batch_of(rows, _arrow_schema_of(CHUNK_SCHEMA))
+    t_batch = time.monotonic() - t0
 
     print(f"n_docs={len(docs)} n_spans={n_spans} n_chunks={len(rows)}")
     print(f"datagen gen_doc_spans      : {t_gen:7.3f} s")
-    print(f"spans list->pandas         : {t_span_pdf:7.3f} s")
-    print(f"spans pandas->arrow        : {t_span_arrow:7.3f} s")
+    print(f"spans list->arrow          : {t_span_arrow:7.3f} s")
+    print(f"spans arrow->dicts decode  : {t_decode:7.3f} s")
     print(f"kernel chunk_document      : {t_kernel:7.3f} s")
-    print(f"chunks dicts->pandas       : {t_pdf:7.3f} s")
-    print(f"chunks dicts->cols->pandas : {t_pdf_cols:7.3f} s")
-    print(f"chunks pandas->arrow       : {t_arrow:7.3f} s")
-    print(f"chunks cols->arrow direct  : {t_arrow_direct:7.3f} s")
+    print(f"chunks dicts->RecordBatch  : {t_batch:7.3f} s")
 
     if os.environ.get("PROFILE_CPROFILE"):
         pr = cProfile.Profile()
