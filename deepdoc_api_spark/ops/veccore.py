@@ -78,12 +78,36 @@ def sim_micro_matrix(
     return np.floor(sims).astype(np.int64)
 
 
-def argmax_cid(sims: np.ndarray, cids: np.ndarray) -> np.ndarray:
-    """Per-row ``array_max(struct(sim, -cid))`` tie-break: highest sim,
-    then lowest cid. ``cids`` must be ascending (the collect_list is
-    array_sort'ed by cid), so numpy's first-max argmax IS the
-    tie-break."""
-    return cids[np.argmax(sims, axis=1)]
+#: bytes of the ``(rows, centroids, dim)`` float64 product one
+#: :func:`nearest_centroid` tile may build (``seq_sum`` briefly holds
+#: about three arrays of that size). An untiled search at the
+#: IVF_MAX_NLIST cap of 65,536 centroids would build ~34 GB for a
+#: 1,024-row, 64-dim batch.
+NEAREST_TILE_BYTES = 32 << 20
+
+
+def nearest_centroid(
+    X: np.ndarray, nv: np.ndarray, C: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """Row index into ``C`` of each row's best centroid by
+    :func:`sim_micro_matrix`: highest sim, then lowest index. With ``C``
+    ascending by cid (the array_sort contract of the JVM struct-max)
+    that is ``_argmax_cell``'s (sim DESC, cid ASC) tie-break. ``C`` is
+    non-empty. Centroids are scored in ascending tiles of at most
+    :data:`NEAREST_TILE_BYTES`; a later tile takes a row only on a
+    strictly greater sim, so ties stay with the lower index."""
+    n, dim = X.shape
+    tile = max(1, NEAREST_TILE_BYTES // (8 * max(n * dim, 1)))
+    best = np.zeros(n, dtype=np.int64)
+    best_sim = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
+    for lo in range(0, len(C), tile):
+        sims = sim_micro_matrix(X, nv, C[lo : lo + tile], nb[lo : lo + tile])
+        j = np.argmax(sims, axis=1)
+        s = sims[np.arange(n), j]
+        better = s > best_sim
+        best[better] = j[better] + lo
+        best_sim[better] = s[better]
+    return best
 
 
 def band_keys(X: np.ndarray, signs: np.ndarray, band_bits: int) -> np.ndarray:

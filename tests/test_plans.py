@@ -6,6 +6,7 @@ column pruning reaching the scan, broadcast joins for small sides,
 shuffle counts, and codegen coverage.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -45,18 +46,23 @@ def test_minhash_has_no_extra_shuffle(spark, sf_dir):
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
 
 
-def test_ann_query_side_never_shuffles_big_side(spark, sf_dir):
-    """The scoring pass must see the big side map-side only: round 8
-    replaced the broadcast join + interpreted per-pair dot with a numpy
-    kernel closing over the collected (bounded) query side — the big
-    table still reaches scoring without ANY join or exchange; the only
-    shuffle left is the final per-query top-k window."""
+@pytest.mark.parametrize(
+    "op", ["brute_force_topk", "lsh_bucket_topk", "banded_topk", "ivf_topk"]
+)
+def test_ann_query_side_never_shuffles_big_side(spark, sf_dir, op):
+    """Every top-k op scores the big side map-side only: one numpy
+    kernel closes over the collected (bounded) query side, so the table
+    reaches scoring with no join, no exchange and no interpreted
+    per-pair lambda; the only shuffle left is the final per-query top-k
+    window."""
     import re
 
     from deepdoc_api_spark.ops import similarity
 
-    plan = plan_of(similarity.brute_force_topk(spark, sf_dir))
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    plan = plan_of(getattr(similarity, op)(spark, sf_dir))
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
+        assert join not in plan, join
+    assert "zip_with" not in plan
     assert "MapInArrow" in plan
     # exactly one Exchange: the top-k window's hashpartitioning(qid)
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)

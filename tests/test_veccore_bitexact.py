@@ -19,17 +19,15 @@ from deepdoc_api_spark.ops.similarity import (
     _NORM,
     _WITH_NB,
     _argmax_cell,
-    _band_sig_exprs,
-    _hp_row,
     hyperplane_signs,
 )
+from deepdoc_api_spark.ops import veccore
 from deepdoc_api_spark.ops.veccore import (
-    argmax_cid,
     band_keys,
     list_col_to_matrix,
+    nearest_centroid,
     seq_norm,
     seq_sum,
-    sim_micro_matrix,
 )
 
 DIM = 16
@@ -62,6 +60,33 @@ def _adversarial_vectors(n=64, dim=DIM):
     return vecs
 
 
+def _jvm_band_sig_exprs(dim, n_bands, band_bits):
+    """The interpreted JVM band keys the top-k and near-dup ops used
+    before veccore: a left-to-right ``aggregate(zip_with(...))`` sign
+    fold per hyperplane over the ``hp`` column of :func:`_jvm_hp_row`,
+    packed ``sum(bit_j << j)`` per band."""
+    out = []
+    for band in range(n_bands):
+        bits = []
+        for j in range(band_bits):
+            b = band * band_bits + j
+            bits.append(
+                f"case when aggregate(zip_with(embedding, element_at(hp, {b + 1}),"
+                " (x, s) -> cast(x as double) * s), cast(0.0 as double),"
+                f" (acc, v) -> acc + v) >= 0 then {1 << j} else 0 end"
+            )
+        out.append(" + ".join(bits))
+    return out
+
+
+def _jvm_hp_row(spark, dim, n_bits):
+    """1-row ``hp: array<array<int>>`` table (row k = hyperplane k's ±1
+    signs), broadcast-joined next to the vectors for
+    :func:`_jvm_band_sig_exprs`."""
+    hp = [hyperplane_signs(b, dim) for b in range(n_bits)]
+    return spark.createDataFrame([(hp,)], "hp array<array<int>>")
+
+
 @pytest.fixture(scope="module")
 def vec_df(spark):
     vecs = _adversarial_vectors()
@@ -74,8 +99,8 @@ def vec_df(spark):
 
 def test_band_keys_bitexact(spark, vec_df):
     vecs, df = vec_df
-    sigs = _band_sig_exprs(DIM, quote=False, n_bands=N_BANDS, band_bits=BAND_BITS)
-    hp = _hp_row(spark, DIM, N_BANDS * BAND_BITS)
+    sigs = _jvm_band_sig_exprs(DIM, N_BANDS, BAND_BITS)
+    hp = _jvm_hp_row(spark, DIM, N_BANDS * BAND_BITS)
     from pyspark.sql import functions as F
 
     jvm = (
@@ -96,11 +121,12 @@ def test_band_keys_bitexact(spark, vec_df):
             assert got[r.vec_id][i] == r[f"k{i}"], (r.vec_id, i)
 
 
-def test_norm_and_argmax_bitexact(spark, vec_df):
+def test_norm_and_argmax_bitexact(spark, vec_df, monkeypatch):
     vecs, df = vec_df
     # centroids: a mix of the vectors themselves (float32 values) —
-    # the assign1 seed case — with non-contiguous cids
-    cents = [(2 * i, vecs[i * 7]) for i in range(6)]
+    # the assign1 seed case — with non-contiguous cids; cid 13 repeats
+    # cid 0's vector, so its members tie and must keep the lower cid
+    cents = [(2 * i, vecs[i * 7]) for i in range(6)] + [(13, vecs[0])]
     from pyspark.sql import functions as F
 
     cent_row = spark.createDataFrame(
@@ -122,13 +148,18 @@ def test_norm_and_argmax_bitexact(spark, vec_df):
     C = np.array([c for _cid, c in cents], dtype=np.float32).astype(np.float64)
     nb = seq_norm(C)
     cids = np.array([cid for cid, _c in cents], dtype=np.int64)
-    sims = sim_micro_matrix(X, nv_py, C, nb)
-    got_cid = argmax_cid(sims, cids)
+    got_cid = cids[nearest_centroid(X, nv_py, C, nb)]
+    # a budget of two centroids per tile: four tiles, the tied cid 13
+    # alone in the last one
+    monkeypatch.setattr(veccore, "NEAREST_TILE_BYTES", 8 * len(X) * DIM * 2)
+    tiled_cid = cids[nearest_centroid(X, nv_py, C, nb)]
+    assert any(r.cid == 0 for r in jvm), "tie case not exercised"
     for r in jvm:
         # the JVM nv doubles must equal the numpy fold bit-for-bit —
         # they are consumed downstream by both engines' divides
         assert r.nv == nv_py[r.vec_id], r.vec_id
         assert got_cid[r.vec_id] == r.cid, r.vec_id
+        assert tiled_cid[r.vec_id] == r.cid, r.vec_id
 
 
 def test_pairwise_sim_matches_jvm_pair_expression(spark, vec_df):
