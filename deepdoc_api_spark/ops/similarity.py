@@ -8,6 +8,10 @@ query. All four top-k ops run one numpy scoring pass
 per-query rank (:func:`_rank_topk`); they differ only in their
 candidate rule.
 
+Every embedding kernel is numpy over whole Arrow batches, run through
+one stage helper (:func:`_vector_stage`); the math is in
+:mod:`~deepdoc_api_spark.ops.veccore`.
+
 Float discipline for the DuckDB oracle: embeddings are float32 on
 disk; both engines cast each element to double *before* multiplying
 (the product of two float32s is exact in double) and accumulate in
@@ -19,17 +23,28 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
+
+from deepdoc_api_spark.job.pipeline import _arrow_schema_of
+from deepdoc_api_spark.ops.veccore import (
+    band_keys,
+    list_col_to_matrix,
+    nearest_centroid,
+    pair_sim_micro,
+    seq_norm,
+    sim_micro_matrix,
+)
 
 DEFAULT_K = 5
 DEFAULT_N_QUERIES = 8
 LSH_BITS = 8
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0.0 as double), (acc, v) -> acc + v)"
-)
+#: the interpreted L2 norm, kept for ``embedding_norms`` (a JVM-only
+#: op); the numpy kernels use ``veccore.seq_norm``, pinned equal to it
 _NORM = (
     "sqrt(aggregate({a}, cast(0.0 as double),"
     " (acc, x) -> acc + cast(x as double) * cast(x as double)))"
@@ -94,12 +109,70 @@ def _embedding_dim(sf_dir: str) -> int:
 def _id_matrix(rows):
     """``(ids, M)`` of ``(id, vector)`` rows: an int64 id array and the
     (n, dim) float64 matrix of the float32 values (exact casts)."""
-    import numpy as np
-
     ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
     if not rows:
         return ids, np.zeros((0, 0))
     return ids, np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def _decoded(rb: pa.RecordBatch, dim: int, vec_cols) -> dict:
+    """The columns of ``rb`` by name as numpy arrays; the ``vec_cols``
+    (``array<float|double>``) as (n, ``dim``) float64 matrices."""
+    return {
+        name: list_col_to_matrix(col, dim)
+        if name in vec_cols
+        else col.to_numpy(zero_copy_only=False)
+        for name, col in zip(rb.schema.names, rb.columns)
+    }
+
+
+def _encoded(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
+    """One batch of ``schema`` from a dict of numpy columns (keys outside
+    the schema are ignored). A 2-D matrix fills an array column, each
+    row one list; a masked array gives nulls."""
+
+    def column(v, typ):
+        if np.ndim(v) == 2:
+            n, d = v.shape
+            return pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int32) * d),
+                pa.array(v.ravel(), type=typ.value_type),
+                type=typ,
+            )
+        return pa.array(v, type=typ)
+
+    return pa.RecordBatch.from_arrays(
+        [column(cols[f.name], f.type) for f in schema], schema=schema
+    )
+
+
+def _vector_stage(
+    df: DataFrame, fn, ddl: str, dim: int, *vec_cols: str, by: Optional[str] = None
+) -> DataFrame:
+    """Run the numpy kernel ``fn`` over ``df`` as one Arrow stage with
+    output schema ``ddl`` (parsed once, here).
+
+    ``fn`` is called once per task with an iterator over the task's
+    non-empty batches, each decoded by :func:`_decoded` (so a kernel
+    may keep state across batches), and yields output batches as column
+    dicts for :func:`_encoded`. With ``by``, the stage is a grouped
+    ``applyInArrow`` and ``fn`` is called once per group of ``by``,
+    which arrives as one batch."""
+    schema = _arrow_schema_of(_parse_datatype_string(ddl))
+
+    def run(batches):
+        decoded = (_decoded(rb, dim, vec_cols) for rb in batches if rb.num_rows)
+        for cols in fn(decoded):
+            yield _encoded(cols, schema)
+
+    if by is None:
+        return df.mapInArrow(run, ddl)
+    return df.groupBy(by).applyInArrow(
+        lambda t: pa.Table.from_batches(
+            list(run(t.combine_chunks().to_batches())), schema=schema
+        ),
+        ddl,
+    )
 
 
 def _query_side(emb: DataFrame, n_queries: int):
@@ -120,53 +193,31 @@ def _score_queries(emb: DataFrame, qids, Q, candidates=None) -> DataFrame:
 
     ``candidates(X, nv)``, when given, returns the batch's ``(n,
     n_queries)`` bool mask of the pairs that count; only rows with at
-    least one candidate are scored. The sims are the floor-micro cosine
-    of the interpreted ``_DOT``/``_NORM`` expressions: veccore repeats
-    their left-to-right double fold (tests/test_veccore_bitexact.py),
-    and each pair's value does not depend on which others are scored."""
+    least one candidate are scored. Each pair's value does not depend
+    on which others are scored."""
 
     def score(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from deepdoc_api_spark.ops.veccore import (
-            list_col_to_matrix,
-            seq_norm,
-            sim_micro_matrix,
-        )
-
         if len(qids) == 0:
             return
         nq = seq_norm(Q)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column(rb.schema.get_field_index("vec_id")).to_numpy(
-                zero_copy_only=False
-            )
-            X = list_col_to_matrix(
-                rb.column(rb.schema.get_field_index("embedding")), Q.shape[1]
-            )
+        for b in batches:
+            ids, X = b["vec_id"], b["embedding"]
             nv = seq_norm(X)
             pairs = ids[:, None] != qids[None, :]
             if candidates is not None:
                 pairs &= candidates(X, nv)
             rows = pairs.any(axis=1)
             r, c = np.nonzero(pairs[rows])
-            if len(r) == 0:
-                continue
-            sims = sim_micro_matrix(X[rows], nv[rows], Q, nq)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[c], type=pa.int64()),
-                    pa.array(ids[rows][r], type=pa.int64()),
-                    pa.array(sims[r, c], type=pa.int64()),
-                ],
-                names=["qid", "vec_id", "sim_micro"],
-            )
+            if len(r):
+                sims = sim_micro_matrix(X[rows], nv[rows], Q, nq)
+                yield {"qid": qids[c], "vec_id": ids[rows][r], "sim_micro": sims[r, c]}
 
-    return emb.select("vec_id", "embedding").mapInArrow(
-        score, "qid bigint, vec_id bigint, sim_micro bigint"
+    return _vector_stage(
+        emb.select("vec_id", "embedding"),
+        score,
+        "qid bigint, vec_id bigint, sim_micro bigint",
+        Q.shape[1],
+        "embedding",
     )
 
 
@@ -263,10 +314,6 @@ def _shares_band(Q, n_bands: int, band_bits: int):
     for a query when their ``band_bits``-bit keys are equal in at least
     one of ``n_bands`` bands. Keys come from veccore.band_keys, the
     bit-exact twin of the interpreted sign fold."""
-    import numpy as np
-
-    from deepdoc_api_spark.ops.veccore import band_keys
-
     signs = np.array(
         [hyperplane_signs(b, Q.shape[1]) for b in range(n_bands * band_bits)],
         dtype=np.float64,
@@ -369,57 +416,31 @@ def _near_dup_pairs_from(
     key) — vectors never ride the ``n_bands``-fold fan-out. Candidate
     pairs are deduped on scalar ids, then embeddings are fetched by two
     id joins against the base table (the same candidates-then-fetch
-    pattern as the Jaccard text path) for the exact-cosine verify.
+    pattern as the Jaccard text path) for the exact-cosine verify, one
+    numpy pass per batch of fetched pairs.
     """
-    import numpy as np
-
     from deepdoc_api_spark.ops.dedup import _checkpoint
 
-    # Round 8 (guide §4.2): the n_bands·band_bits hyperplane projections
-    # move from interpreted JVM lambda folds (~n·128·dim interpreted
-    # steps per pass) to one vectorized numpy kernel per Arrow batch.
-    # Bit-exact by construction: veccore mirrors the left-to-right
-    # double accumulation of the old `aggregate(zip_with(...))`
-    # expressions (see veccore module docstring); the signs are the
-    # same driver-computed hyperplane_signs constants. Sketch rows,
-    # checkpoint, suppression and joins are unchanged.
     signs = np.array(
         [hyperplane_signs(b, dim) for b in range(n_bands * band_bits)],
         dtype=np.float64,
     )
 
     def mk_bands(batches):
-        import numpy as _np
-        import pyarrow as pa
+        for b in batches:
+            keys = band_keys(b["embedding"], signs, band_bits)  # (n, n_bands)
+            yield {
+                "vec_id": np.repeat(b["vec_id"], n_bands),
+                "band": np.tile(np.arange(n_bands, dtype=np.int32), len(keys)),
+                "key": keys.reshape(-1),
+            }
 
-        from deepdoc_api_spark.ops.veccore import band_keys, list_col_to_matrix
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column(rb.schema.get_field_index("vec_id")).to_numpy(
-                zero_copy_only=False
-            )
-            X = list_col_to_matrix(
-                rb.column(rb.schema.get_field_index("embedding")), dim
-            )
-            keys = band_keys(X, signs, band_bits)  # (n, n_bands) int32
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(_np.repeat(ids, n_bands), type=pa.int64()),
-                    pa.array(
-                        _np.tile(
-                            _np.arange(n_bands, dtype=_np.int32), len(ids)
-                        ),
-                        type=pa.int32(),
-                    ),
-                    pa.array(keys.reshape(-1), type=pa.int32()),
-                ],
-                names=["vec_id", "band", "key"],
-            )
-
-    bands = emb.select("vec_id", "embedding").mapInArrow(
-        mk_bands, "vec_id bigint, band int, key int"
+    bands = _vector_stage(
+        emb.select("vec_id", "embedding"),
+        mk_bands,
+        "vec_id bigint, band int, key int",
+        dim,
+        "embedding",
     )
     # the band sketch feeds THREE consumers (bucket histogram + both
     # self-join sides); without materialization each re-runs the
@@ -446,18 +467,21 @@ def _near_dup_pairs_from(
     )
     ea = emb.selectExpr("vec_id as id_a", "embedding as ea")
     eb = emb.selectExpr("vec_id as id_b", "embedding as eb")
-    dot = _DOT.format(a="ea", b="eb")
-    na = _NORM.format(a="ea")
-    nb = _NORM.format(a="eb")
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .selectExpr(
-            "id_a",
-            "id_b",
-            f"cast(floor({dot} / ({na} * {nb}) * 1000000) as bigint) as sim_micro",
-        )
-        .filter(F.col("sim_micro") >= threshold_micro)
+
+    def verify(batches):
+        for p in batches:
+            A, B = p["ea"], p["eb"]
+            sims = pair_sim_micro(A, B, seq_norm(A), seq_norm(B))
+            keep = sims >= threshold_micro
+            yield {"id_a": p["id_a"][keep], "id_b": p["id_b"][keep], "sim_micro": sims[keep]}
+
+    return _vector_stage(
+        cand.join(ea, "id_a").join(eb, "id_b").select("id_a", "id_b", "ea", "eb"),
+        verify,
+        "id_a bigint, id_b bigint, sim_micro bigint",
+        dim,
+        "ea",
+        "eb",
     )
 
 
@@ -749,177 +773,92 @@ def _n_vecs(sf_dir: str) -> int:
     return parquet_num_rows(f"{sf_dir.rstrip('/')}/embeddings.parquet")
 
 
-# Norm hoisting (round-4): norms are loop-invariant across the
-# nlist comparisons — the vector's norm is computed ONCE per row
-# (a column) and each centroid's norm ONCE per centroid (inside
-# the broadcast struct), so the per-row lambda runs one aggregate
-# (the dot product) instead of three. Same expressions, evaluated
-# once and reused: sim_micro values (and the oracle) are unchanged.
-# Also ~3x smaller expression tree — the unhoisted form's one-time
-# plan/JIT cost dominated the op at benchmark scale (~5 s cold).
-_WITH_NB = (
-    f"transform(cents, ct -> struct(ct.cid as cid, ct.c as c,"
-    f" {_NORM.format(a='ct.c')} as nb)) as cents"
+#: outputs of the kmeans kernels: a first-level member takes its cell
+#: as ``cid``; a sub-cluster member keeps ``cid`` and takes ``scid``;
+#: the Lloyd partials of :func:`_lloyd_partials` are keyed the same way
+_ASSIGN_DDL = "vec_id bigint, embedding array<float>, nv double, cid bigint"
+_SUB_ASSIGN_DDL = (
+    "cid bigint, vec_id bigint, embedding array<float>, nv double, scid bigint"
 )
+_PARTIALS_DDL = "cid bigint, dim int, s bigint"
+_SUB_PARTIALS_DDL = "cid bigint, scid bigint, dim int, s bigint"
 
 
-def _argmax_cell(vec: str, nv: str) -> str:
-    # Per-row argmax over the broadcast centroid array (round-3
-    # VERDICT #3): an array(struct(sim_micro, -cid)) maximum gives
-    # (sim DESC, cid ASC) tie-break semantics with ZERO row fan-out
-    # — the old plan exploded N×nlist rows each carrying the full
-    # vector through a row_number() window sort, twice. Same
-    # pattern as the LSH per-row bit computation.
-    dot = _DOT.format(a=vec, b="ct.c")
+def _labelled(ids, X, cents, label: str) -> dict:
+    """One piece of member rows for the kmeans kernels: ``vec_id``,
+    ``embedding``, ``nv = seq_norm(X)`` and ``label``, the id of each
+    row's nearest centroid in ``cents = (ids, C, nb)`` (ascending by
+    id, all norms nonzero) — null for every row when ``cents`` is
+    empty."""
+    cids, C, nb = cents
+    nv = seq_norm(X)
+    if len(cids):
+        lab = cids[nearest_centroid(X, nv, C, nb)]
+    else:
+        lab = np.ma.masked_all(len(X), np.int64)
+    return {"vec_id": ids, "embedding": X, "nv": nv, label: lab}
+
+
+def _lloyd_partials(pieces, *keys: str):
+    """Per-task Lloyd partials of the labelled ``pieces``: one row per
+    (``keys``, dim) with ``s``, the int64 sum of the members'
+    ``floor(x·1e6)``. Integer addition is associative, so the partials
+    of any split sum to the exact totals. Rows with a null key are
+    left out."""
+    sums: dict = {}
+    for p in pieces:
+        if any(np.ma.is_masked(p[k]) for k in keys):
+            continue
+        K = np.stack([p[k] for k in keys], axis=1)
+        uniq, inv = np.unique(K, axis=0, return_inverse=True)
+        xm = np.floor(p["embedding"] * 1000000.0).astype(np.int64)
+        part = np.zeros((len(uniq), xm.shape[1]), dtype=np.int64)
+        np.add.at(part, inv.reshape(-1), xm)
+        for key, v in zip(map(tuple, uniq.tolist()), part):
+            sums[key] = sums[key] + v if key in sums else v
+    if sums:
+        dim = len(next(iter(sums.values())))
+        out = {
+            k: np.repeat([key[i] for key in sums], dim) for i, k in enumerate(keys)
+        }
+        out["dim"] = np.tile(np.arange(dim, dtype=np.int32), len(sums))
+        out["s"] = np.concatenate(list(sums.values()))
+        yield out
+
+
+def _lloyd_centroids(partials: DataFrame, *keys: str) -> DataFrame:
+    """The refined centroids of :func:`_lloyd_partials` rows: per
+    ``keys``, ``c`` = the summed micros by dim, as doubles. Zero
+    centroids are dropped: the integer-micro Lloyd quantizes sub-micro
+    vectors to the zero vector, whose norm would divide in the cosine
+    argmax (ANSI abort on Spark, inf on DuckDB); their members go to
+    the nearest nonzero centroid, as in the oracle's cent CTEs."""
     return (
-        f"cast(-array_max(transform(cents, ct -> struct("
-        f"cast(floor({dot} / ({nv} * ct.nb) * 1000000) as bigint)"
-        f" as sim_micro,"
-        f" cast(-ct.cid as bigint) as neg_cid))).neg_cid as bigint)"
+        partials.groupBy(*keys, "dim")
+        .agg(F.sum("s").alias("s"))
+        .groupBy(*keys)
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(dim, s))),"
+                " p -> cast(p.s as double))"
+            ).alias("c")
+        )
+        .filter("exists(c, x -> x != cast(0.0 as double))")
     )
 
 
-def _assign_arrow(emb_n: DataFrame, cid_list, cent_list) -> DataFrame:
-    """Per-row argmax cell assignment, numpy-vectorized (round 8).
+def _nearest_stage(emb: DataFrame, cent_rows, dim: int, fn, ddl: str) -> DataFrame:
+    """Label every (vec_id, embedding) row of ``emb`` with its nearest
+    of ``cent_rows`` ((cid, c) rows, ascending by cid, broadcast once)
+    and run ``fn`` over each task's :func:`_labelled` pieces."""
+    cids, C = _id_matrix(cent_rows)
+    bc = emb.sparkSession.sparkContext.broadcast((cids, C, seq_norm(C)))
 
-    Value-identical twin of ``_argmax_cell`` over a broadcast centroid
-    array: veccore mirrors the left-to-right double accumulation, the
-    floor-to-micro cast and the (sim DESC, cid ASC) tie-break of the
-    JVM struct-max (see veccore docstring; bit-equality pinned by
-    tests/test_veccore_bitexact.py). ``cid_list``/``cent_list`` must be
-    ascending by cid — the same array_sort contract the struct-max
-    relied on. Empty centroid set → all-null cids, mirroring the JVM
-    ``array_max`` over an empty array."""
-    import numpy as np
+    def run(batches):
+        cents = bc.value
+        return fn(_labelled(b["vec_id"], b["embedding"], cents, "cid") for b in batches)
 
-    if not cid_list:
-        return emb_n.selectExpr(
-            "vec_id", "embedding", "nv", "cast(null as bigint) as cid"
-        )
-    from deepdoc_api_spark.ops.veccore import seq_norm
-
-    Ca = np.array(cent_list, dtype=np.float64)
-    dim = Ca.shape[1]
-    nb = seq_norm(Ca)
-    cida = np.array(cid_list, dtype=np.int64)
-    bc = emb_n.sparkSession.sparkContext.broadcast((cida, Ca, nb))
-
-    def assign(batches):
-        import pyarrow as pa
-
-        from deepdoc_api_spark.ops.veccore import (
-            list_col_to_matrix,
-            nearest_centroid,
-        )
-
-        cids_b, C_b, nb_b = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            i_emb = rb.schema.get_field_index("embedding")
-            X = list_col_to_matrix(rb.column(i_emb), dim)
-            nv = rb.column(rb.schema.get_field_index("nv")).to_numpy(
-                zero_copy_only=False
-            )
-            cid = cids_b[nearest_centroid(X, nv, C_b, nb_b)]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("vec_id")),
-                    rb.column(i_emb),
-                    rb.column(rb.schema.get_field_index("nv")),
-                    pa.array(cid, type=pa.int64()),
-                ],
-                names=["vec_id", "embedding", "nv", "cid"],
-            )
-
-    return emb_n.mapInArrow(
-        assign,
-        "vec_id bigint, embedding array<float>, nv double, cid bigint",
-    )
-
-
-def _assign_lloyd_partials(emb_n: DataFrame, cid_list, cent_list) -> DataFrame:
-    """Seed-assignment + per-task partial Lloyd sums in one numpy pass
-    (round 8): assigns each vector to its argmax seed exactly like
-    ``_assign_arrow`` and emits ``(cid, dim, s)`` partial sums of
-    ``floor(x·1e6)`` int64 micros. Integer addition is associative, so
-    the partials aggregate to the identical totals the old
-    posexplode → groupBy path produced. Empty seed set mirrors the old
-    null-cid aggregate: no rankable centroid → no rows."""
-    import numpy as np
-
-    spark = emb_n.sparkSession
-    if not cid_list:
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("cid", LongType()),
-                    StructField("dim", IntegerType()),
-                    StructField("s", LongType()),
-                ]
-            ),
-        )
-    from deepdoc_api_spark.ops.veccore import seq_norm
-
-    Ca = np.array(cent_list, dtype=np.float64)
-    dim = Ca.shape[1]
-    nb = seq_norm(Ca)
-    cida = np.array(cid_list, dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cida, Ca, nb))
-
-    def part(batches):
-        import pyarrow as pa
-
-        from deepdoc_api_spark.ops.veccore import (
-            list_col_to_matrix,
-            nearest_centroid,
-        )
-
-        cids_b, C_b, nb_b = bc.value
-        sums: dict = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            X = list_col_to_matrix(
-                rb.column(rb.schema.get_field_index("embedding")), dim
-            )
-            nv = rb.column(rb.schema.get_field_index("nv")).to_numpy(
-                zero_copy_only=False
-            )
-            cid = cids_b[nearest_centroid(X, nv, C_b, nb_b)]
-            xm = np.floor(X * 1000000.0).astype(np.int64)
-            for c in np.unique(cid):
-                s = xm[cid == c].sum(axis=0)
-                if c in sums:
-                    sums[c] += s
-                else:
-                    sums[c] = s
-        if sums:
-            cids_out: list = []
-            dims_out: list = []
-            s_out: list = []
-            for c, s in sums.items():
-                cids_out.extend([int(c)] * dim)
-                dims_out.extend(range(dim))
-                s_out.extend(int(v) for v in s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cids_out, type=pa.int64()),
-                    pa.array(dims_out, type=pa.int32()),
-                    pa.array(s_out, type=pa.int64()),
-                ],
-                names=["cid", "dim", "s"],
-            )
-
-    return emb_n.mapInArrow(part, "cid bigint, dim int, s bigint")
+    return _vector_stage(emb, run, ddl, dim, "embedding")
 
 
 def _kmeans_assign(emb: DataFrame, nlist: int, seed_rows=None):
@@ -935,14 +874,7 @@ def _kmeans_assign(emb: DataFrame, nlist: int, seed_rows=None):
     them (ivf shares one job for seeds + query vectors) passes
     ``seed_rows`` (cid-ascending rows of (cid, c)).
     """
-    emb_n = emb.selectExpr(
-        "vec_id", "embedding",
-        f"{_NORM.format(a='embedding')} as nv",
-    )
-    # seeds collected driver-side (≤ nlist rows — the same bounded
-    # Lloyd-collect class as the centroid collect below); round 8 moved
-    # the argmax passes to the numpy kernel, which needs the centroid
-    # values in hand rather than as a broadcast-joined 1-row relation
+    emb = emb.select("vec_id", "embedding")
     if seed_rows is None:
         seed_rows = sorted(
             emb.filter(f"vec_id >= 0 and vec_id < {nlist}")
@@ -950,67 +882,30 @@ def _kmeans_assign(emb: DataFrame, nlist: int, seed_rows=None):
             .collect(),
             key=lambda r: r.cid,
         )
-    # Lloyd update in integer micro space. Round 8: the per-element
-    # ``floor(x·1e6)`` explode (N·dim float rows through two codegen
-    # stages) is folded INTO the numpy assignment kernel as per-task
-    # partial sums — integer addition is associative, so partial
-    # aggregation order cannot move the totals (bit-exact by
-    # arithmetic, not just by luck). The shuffle now carries ≤
-    # tasks·nlist·dim scalar rows instead of N·dim, with the same
-    # (cid, dim) → sum → per-cid array fold on top.
-    partials = _assign_lloyd_partials(
-        emb_n,
-        [int(r.cid) for r in seed_rows],
-        [[float(v) for v in r.c] for r in seed_rows],
+    if not seed_rows:
+        # no rankable seed (e.g. the whole [0, nlist) id range was zero
+        # vectors dropped by the nonzero guard): the clustering is empty
+        # in both engines, as the oracle's empty seeds CTE gives
+        return emb.selectExpr(
+            "vec_id", "embedding", "cast(null as double) as nv",
+            "cast(null as bigint) as cid",
+        ).filter("false"), []
+    dim = len(seed_rows[0].c)
+    # Lloyd update: the seed assignment emits per-task partial sums.
+    # The refined centroids are collected driver-side — the standard
+    # Lloyd pattern (MLlib KMeans collects centroids every iteration),
+    # bounded at nlist rows × dim doubles; without it the whole Lloyd
+    # subtree (a full-corpus pass) would run again under each consumer.
+    partials = _nearest_stage(
+        emb, seed_rows, dim, lambda p: _lloyd_partials(p, "cid"), _PARTIALS_DDL
     )
-    cent = (
-        partials.groupBy("cid", "dim")
-        .agg(F.sum("s").alias("s"))
-        .groupBy("cid")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, s))),"
-                " p -> cast(p.s as double))"
-            ).alias("c")
-        )
-    )
-    # Materialize the refined centroids driver-side — the standard
-    # Lloyd pattern (MLlib KMeans collects centroids every iteration).
-    # Bounded at nlist rows × dim doubles regardless of corpus size;
-    # without it the whole Lloyd subtree (a full-corpus pass) executes
-    # twice, once under each broadcast consumer (no exchange reuse for
-    # distinct one-row aggregate subtrees). The collected values go
-    # back in as ONE re-created row that both consumers broadcast-join
-    # (a per-row literal array was measured 40% slower — Catalyst does
-    # not constant-fold a 1024-literal CreateArray, so every row paid
-    # the construction). Doubles round-trip exactly; oracle equality
-    # is untouched.
-    # Drop ZERO centroids (round-5 edge fix): the integer-micro Lloyd
-    # quantizes sub-micro vectors to the zero vector, whose norm then
-    # divides in the cosine argmax (ANSI abort on Spark, inf on
-    # DuckDB). A zero centroid cannot be cosine-ranked; its members
-    # re-assign to the nearest NONZERO centroid — the oracle's cent
-    # CTE applies the identical filter.
-    # r.cid is None when NO rankable seed existed (e.g. the whole
-    # [0, nlist) id range was zero vectors dropped by the nonzero
-    # guard): assign1 yields null cids, which aggregate into one
-    # cid=None centroid row — skip it (the oracle's empty seeds CTE
-    # yields an empty result the null-cid filter below mirrors)
     cent_rows = sorted(
-        (
-            r
-            for r in cent.collect()
-            if r.cid is not None and any(float(v) != 0.0 for v in r.c)
-        ),
-        key=lambda r: r.cid,
+        _lloyd_centroids(partials, "cid").collect(), key=lambda r: r.cid
     )
-    assign = _assign_arrow(
-        emb_n,
-        [int(r.cid) for r in cent_rows],
-        [[float(v) for v in r.c] for r in cent_rows],
-        # null cid = no rankable centroid exists (empty centroid set) —
-        # such vectors leave the clustering in BOTH engines (the
-        # oracle's a2 row_number naturally drops them)
+    # a null cid (no rankable centroid) leaves the clustering in both
+    # engines (the oracle's a2 row_number drops such vectors)
+    assign = _nearest_stage(
+        emb, cent_rows, dim, lambda p: p, _ASSIGN_DDL
     ).filter("cid is not null")
     return assign, cent_rows
 
@@ -1030,12 +925,10 @@ def ivf_topk(
     if nlist is None:
         nlist = nlist_for(_n_vecs(sf_dir))
     # ONE bounded collect fetches the k-means seeds AND the query
-    # vectors (round 8): the old plan ran a separate broadcast subplan
-    # (scan → filter → centroid join → per-query struct-sort explode)
-    # just to pick each query's top-nprobe cells — n_queries × nlist
-    # scalar cosines, driver-sized work by construction. The numpy
-    # probe ranking below mirrors the JVM struct-sort bit-for-bit:
-    # same floor-micro sims (veccore), (-sim, cid) ascending order.
+    # vectors: picking each query's top-nprobe cells is n_queries ×
+    # nlist scalar cosines, driver-sized work by construction. The
+    # numpy probe ranking below orders by (-sim, cid), the oracle's
+    # (sim DESC, cid ASC).
     base_rows = emb.filter(
         f"(vec_id >= 0 and vec_id < {nlist}) or vec_id < {n_queries}"
     ).selectExpr("cast(vec_id as bigint) as cid", "embedding as c").collect()
@@ -1049,11 +942,6 @@ def ivf_topk(
     # only needs the refined centroids; the candidate rule below
     # re-derives each vector's cell exactly (same argmax, pinned)
     _assign_df, cent_rows = _kmeans_assign(emb, nlist, seed_rows=seed_rows)
-
-    import numpy as np
-
-    from deepdoc_api_spark.ops.veccore import seq_norm, sim_micro_matrix
-
     cids, C = _id_matrix(cent_rows)
     nb = seq_norm(C)
     # no rankable centroid → no cell to probe → no query has candidates
@@ -1069,8 +957,6 @@ def ivf_topk(
     bc = spark.sparkContext.broadcast((C, nb, probe))
 
     def in_probed_cell(X, nv):
-        from deepdoc_api_spark.ops.veccore import nearest_centroid
-
         C_b, nb_b, probe_b = bc.value
         return probe_b[nearest_centroid(X, nv, C_b, nb_b)]
 
@@ -1078,8 +964,8 @@ def ivf_topk(
 
 
 def _duck_cos(a: str, b: str) -> str:
-    """DuckDB cosine in sim_micro, arithmetic-identical to the Spark
-    _DOT/_NORM pipeline (double accumulation in index order)."""
+    """DuckDB cosine in sim_micro, arithmetic-identical to
+    ``veccore.pair_sim_micro`` (double accumulation in index order)."""
     return (
         "CAST(floor("
         f"list_sum(list_transform(range(1, len({a}) + 1),"
@@ -1173,12 +1059,12 @@ WHERE rank <= {k}
 # threshold — catches paraphrases and re-encodings that share no
 # n-grams, which MinHash/SimHash blocking cannot see). Clustering
 # reuses the IVF coarse quantizer verbatim (deterministic seeds, one
-# integer-micro Lloyd step, per-row argmax over broadcast centroids).
+# integer-micro Lloyd step, nearest centroid by floor-micro cosine).
 #
 # Scale shape: the pairwise compare is confined to cluster-mates — the
-# corpus shuffles ONCE on cid per join side (vectors ride that shuffle
-# once; candidates-then-fetch would fetch per PAIR, strictly more), and
-# nlist grows ∝ N (round 5, :func:`nlist_for`) so the expected cluster
+# corpus shuffles ONCE on the cluster key and each cluster is scored in
+# one numpy pass (vectors ride that shuffle once; candidates-then-fetch
+# would fetch per PAIR, strictly more), and nlist grows ∝ N (round 5, :func:`nlist_for`) so the expected cluster
 # stays ~IVF_TARGET_CLUSTER-sized (SemDeDup runs 50k clusters on
 # LAION). Cells that still exceed MAX_CLUSTER_VECS are SPLIT by one
 # deterministic sub-clustering pass (seeds = the cell's lowest
@@ -1192,8 +1078,8 @@ SEMANTIC_TAU_MICRO = 900_000
 MAX_CLUSTER_VECS = 4096
 #: sub-cluster fan-out cap: an overflow cell splits into
 #: 2·ceil(n/max) sub-cells (headroom 2× because one Lloyd step does
-#: not balance perfectly), bounded so the per-cell seed array stays
-#: broadcast-join-sized (≤ 64 × dim doubles ≈ 32 KB per cell)
+#: not balance perfectly), bounded so a cell's centroid rows stay small
+#: (≤ 64 × dim doubles, 32 KB per cell at dim 64)
 MAX_SUB_CELLS = 64
 
 
@@ -1206,22 +1092,75 @@ def _nsub_expr(n_vecs: str, max_cluster_vecs: int) -> str:
     )
 
 
-def _subcluster_overflow(
-    assign: DataFrame, over: DataFrame, max_cluster_vecs: int
-) -> DataFrame:
+def _cell_pieces(batches):
+    """:func:`_labelled` member pieces (label ``scid``, plus the cell's
+    ``cid``) of decoded ``(cid, kind, id, c)`` batches sorted by (cid,
+    kind): a cell's centroid rows (kind 0: id = scid, c = centroid)
+    come before its member rows (kind 1: id = vec_id, c = embedding),
+    possibly across batches, and the current cell's centroids are held
+    until the next cell starts."""
+    cell, parts, cents = None, [], None
+    for b in batches:
+        cid, kind = b["cid"], b["kind"]
+        cut = np.flatnonzero((cid[1:] != cid[:-1]) | (kind[1:] != kind[:-1])) + 1
+        for lo, hi in zip(np.r_[0, cut], np.r_[cut, len(cid)]):
+            if cid[lo] != cell:
+                cell, parts, cents = cid[lo], [], None
+            ids, X = b["id"][lo:hi], b["c"][lo:hi]
+            if kind[lo] == 0:
+                parts.append((ids, X))
+                continue
+            if cents is None:
+                # the empty slices give an empty centroid set its shape
+                cids = np.concatenate([ids[:0]] + [i for i, _ in parts])
+                order = np.argsort(cids)
+                C = np.concatenate([X[:0]] + [c for _, c in parts])[order]
+                cents = (cids[order], C, seq_norm(C))
+            piece = _labelled(ids, X, cents, "scid")
+            piece["cid"] = np.full(hi - lo, cell, dtype=np.int64)
+            yield piece
+
+
+def _cell_stage(cents: DataFrame, mem: DataFrame, dim: int, fn, ddl: str) -> DataFrame:
+    """Label each member of ``mem`` (cid, vec_id, embedding) with the
+    nearest of its own cell's centroids ``cents`` (cid, scid, c) and run
+    ``fn`` over each task's :func:`_cell_pieces`.
+
+    One row per centroid (kind 0) is unioned with the member rows (kind
+    1) and the union is hash-partitioned and sorted on (cid, kind), so
+    each centroid enters Python once, in the task that holds its cell.
+    A cell with no centroid row labels its members null."""
+    rows = (
+        cents.selectExpr(
+            "cid", "0 as kind", "scid as id", "cast(c as array<double>) as c"
+        )
+        .unionByName(
+            mem.selectExpr(
+                "cid", "1 as kind", "vec_id as id",
+                "cast(embedding as array<double>) as c",
+            )
+        )
+        .repartition("cid")
+        .sortWithinPartitions("cid", "kind")
+    )
+    return _vector_stage(rows, lambda b: fn(_cell_pieces(b)), ddl, dim, "c")
+
+
+def _subcluster_overflow(assign: DataFrame, over: DataFrame, dim: int) -> DataFrame:
     """Depth-1 sub-clustering of overflow cells (round-4 VERDICT #1).
 
     ``assign``: the checkpointed first-level assignment (vec_id,
-    embedding, nv, cid); ``over``: (cid, nsub) for cells over capacity.
-    Returns every overflow-cell member with its sub-cell id ``scid``
-    (null when the cell has no non-negative seed vectors).
+    embedding, nv, cid); ``over``: (cid, nsub) for cells over capacity;
+    ``dim``: the vector width. Returns every overflow-cell member as
+    (cid, vec_id, embedding, nv, scid), ``scid`` its sub-cell id (null
+    when the cell has no non-negative seed vectors).
 
     Plan shape: the seed selection is a window over the OVERFLOW
-    members only (bounded per cell by the sort, no fan-out); the two
-    assignment joins shuffle overflow members on cid carrying the
-    per-cell centroid arrays (≤ MAX_SUB_CELLS × dim doubles each) —
-    group-wise k-means, never a driver collect (cells are unbounded in
-    count, unlike the first level's ≤ IVF_MAX_NLIST centroids)."""
+    members only (bounded per cell by the sort, no fan-out); the seed
+    assignment with its Lloyd partials and the refined assignment are
+    each one :func:`_cell_stage` — group-wise k-means, never a driver
+    collect (cells are unbounded in count, unlike the first level's
+    ≤ IVF_MAX_NLIST centroids)."""
     from pyspark.sql.window import Window
 
     mem = assign.join(F.broadcast(over), "cid")
@@ -1232,46 +1171,15 @@ def _subcluster_overflow(
         mem.filter("vec_id >= 0")
         .withColumn("rn", rn)
         .filter(F.col("rn") <= F.col("nsub"))
-        .selectExpr(
-            "cid",
-            "named_struct('cid', cast(rn - 1 as bigint), 'c', embedding) as s",
-        )
-        .groupBy("cid")
-        .agg(F.expr("array_sort(collect_list(s))").alias("cents"))
-        .selectExpr("cid", _WITH_NB)
+        .selectExpr("cid", "cast(rn - 1 as bigint) as scid", "embedding as c")
     )
-    a1 = mem.join(seeds, "cid", "left").selectExpr(
-        "cid", "vec_id", "embedding", "nv",
-        f"{_argmax_cell('embedding', 'nv')} as scid",
+    partials = _cell_stage(
+        seeds, mem, dim,
+        lambda p: _lloyd_partials(p, "cid", "scid"),
+        _SUB_PARTIALS_DDL,
     )
-    cent = (
-        a1.filter("scid is not null")
-        .selectExpr("cid", "scid", "posexplode(embedding) as (dim, x)")
-        .selectExpr(
-            "cid", "scid", "dim",
-            "cast(floor(cast(x as double) * 1000000) as bigint) as xm",
-        )
-        .groupBy("cid", "scid", "dim")
-        .agg(F.sum("xm").alias("s"))
-        .groupBy("cid", "scid")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, s))),"
-                " p -> cast(p.s as double))"
-            ).alias("c")
-        )
-        # zero sub-centroids cannot be cosine-ranked (see
-        # _kmeans_assign); members fall back to scid null → overflow
-        .filter("exists(c, x -> x != cast(0.0 as double))")
-        .selectExpr("cid", "named_struct('cid', scid, 'c', c) as s")
-        .groupBy("cid")
-        .agg(F.expr("array_sort(collect_list(s))").alias("cents"))
-        .selectExpr("cid", _WITH_NB)
-    )
-    return mem.join(cent, "cid", "left").selectExpr(
-        "cid", "vec_id", "embedding", "nv",
-        f"{_argmax_cell('embedding', 'nv')} as scid",
-    )
+    cents = _lloyd_centroids(partials, "cid", "scid")
+    return _cell_stage(cents, mem, dim, lambda p: p, _SUB_ASSIGN_DDL)
 
 
 def _semantic_dedup_from(
@@ -1282,7 +1190,9 @@ def _semantic_dedup_from(
 ) -> DataFrame:
     from deepdoc_api_spark.ops.dedup import _checkpoint
 
-    assign, _cent = _kmeans_assign(emb, nlist)
+    assign, cents = _kmeans_assign(emb, nlist)
+    # an empty centroid set means an empty assignment: nothing overflows
+    dim = len(cents[0].c) if cents else 0
     # the assignment feeds FOUR plan branches (sizes, both pairwise
     # sides, final verdict join) plus the sub-cluster pass; without
     # materialization each replays the full clustering subtree — the
@@ -1301,7 +1211,7 @@ def _semantic_dedup_from(
     #
     # Driver-side branch on DATA, not schema: when nothing overflows
     # (the common case once nlist ∝ N) the whole sub-cluster machinery
-    # — window, two centroid joins, a second checkpoint — would run on
+    # — window, two cell stages, a second checkpoint — would run on
     # empty relations but still cost stages and a full re-write of the
     # assignment; both branches produce identical VALUES (the oracle
     # computes uniformly and its sub-cluster CTEs yield no rows). No
@@ -1321,7 +1231,7 @@ def _semantic_dedup_from(
         )
         has_overflow = has_overflow and bool(over.limit(1).count())
         if has_overflow:
-            sub = _subcluster_overflow(cur, over, max_cluster_vecs)
+            sub = _subcluster_overflow(cur, over, dim)
             non_over = cur.join(
                 F.broadcast(over.select("cid")), "cid", "left_anti"
             ).selectExpr("cid", "vec_id", "embedding", "nv",
@@ -1342,58 +1252,30 @@ def _semantic_dedup_from(
     ok = sizes2.filter(F.col("n_vecs") <= max_cluster_vecs).select("fcid")
     members = final.join(F.broadcast(ok), "fcid")
 
-    # Round 8 (guide §4.2): the intra-cluster pairwise compare moves
-    # from a fcid self-join evaluating an interpreted per-pair lambda
-    # dot (O(cluster²·dim) interpreted steps — the op's measured hot
-    # spot at sf0.1) to one numpy kernel per cluster group. Bit-exact:
-    # products are commutative so pair orientation cannot move the
-    # value, the accumulation is the same left-to-right double fold
-    # (veccore), and nv values are the SAME upstream column the JVM
-    # divide consumed. One bonus: groupBy ships each vector once — the
-    # old self-join shuffled both sides. Pair set, threshold and all
-    # downstream aggregations are unchanged.
-    def _pair_fn(pdf):
-        import numpy as np
-        import pandas as pd
+    # every within-cluster pair (id_a < id_b) at or above tau, scored in
+    # slices that bound the (pairs × dim) products; pair orientation
+    # cannot move a value (products commute)
+    def pair_fn(groups):
+        for g in groups:
+            ids, X, nv = g["vec_id"], g["embedding"], g["nv"]
+            ia, ib = np.triu_indices(len(ids), 1)
+            step = max(1, (1 << 23) // max(dim, 1))
+            hits = [np.zeros((3, 0), dtype=np.int64)]
+            for lo in range(0, len(ia), step):
+                sa, sb = ia[lo : lo + step], ib[lo : lo + step]
+                sims = pair_sim_micro(X[sa], X[sb], nv[sa], nv[sb])
+                keep = sims >= tau_micro
+                hits.append(np.stack([ids[sa[keep]], ids[sb[keep]], sims[keep]]))
+            a, b, sim = np.concatenate(hits, axis=1)
+            yield {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b), "sim_micro": sim}
 
-        from deepdoc_api_spark.ops.veccore import seq_sum
-
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "sim_micro": []}
-            ).astype({"id_a": "int64", "id_b": "int64", "sim_micro": "int64"})
-        ids = pdf["vec_id"].to_numpy()
-        X = np.stack(
-            [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-        )
-        nv = pdf["nv"].to_numpy()
-        ia, ib = np.triu_indices(m, 1)
-        out_a, out_b, out_s = [], [], []
-        # bound the (pairs × dim) product matrix per slice
-        step = max(1, (1 << 23) // max(X.shape[1], 1))
-        for s in range(0, len(ia), step):
-            sa, sb = ia[s : s + step], ib[s : s + step]
-            dots = seq_sum(X[sa] * X[sb])
-            sims = np.floor(
-                dots / (nv[sa] * nv[sb]) * 1000000.0
-            ).astype(np.int64)
-            keep = sims >= tau_micro
-            lo = np.minimum(ids[sa[keep]], ids[sb[keep]])
-            hi = np.maximum(ids[sa[keep]], ids[sb[keep]])
-            out_a.append(lo)
-            out_b.append(hi)
-            out_s.append(sims[keep])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "sim_micro": np.concatenate(out_s),
-            }
-        )
-
-    pairs = members.groupBy("fcid").applyInPandas(
-        _pair_fn, "id_a bigint, id_b bigint, sim_micro bigint"
+    pairs = _vector_stage(
+        members.select("fcid", "vec_id", "embedding", "nv"),
+        pair_fn,
+        "id_a bigint, id_b bigint, sim_micro bigint",
+        dim,
+        "embedding",
+        by="fcid",
     )
     partners = pairs.selectExpr("id_a as vec_id", "id_b as partner").unionByName(
         pairs.selectExpr("id_b as vec_id", "id_a as partner")

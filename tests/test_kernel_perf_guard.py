@@ -24,6 +24,8 @@ MAX_RATIO = 5.0
 # normalization across that much contention is not trustworthy -> skip
 CALIB_SKIP_S = 1.5
 N_DOCS = 400
+#: timed kernel passes; the fastest counts
+N_PASSES = 3
 
 
 def _calibrate() -> float:
@@ -37,7 +39,19 @@ def _calibrate() -> float:
     return time.monotonic() - t0
 
 
+def _kernel_pass(spans) -> tuple:
+    t0 = time.monotonic()
+    n_chunks = 0
+    for doc_id, sp in spans:
+        n_chunks += len(chunk_document(doc_id, sp, "hybrid"))
+    return time.monotonic() - t0, n_chunks
+
+
 def test_kernel_throughput_guard(sf_dir):
+    """Both sides of the ratio take their fastest sample: the
+    calibration before and after the kernel passes, and the best of
+    N_PASSES passes, so one descheduled sample on a shared host
+    cannot trip the guard while a real slowdown of every pass does."""
     calib = _calibrate()
     if calib > CALIB_SKIP_S:
         pytest.skip(f"host too loaded for a perf probe (calib {calib:.2f}s)")
@@ -51,13 +65,11 @@ def test_kernel_throughput_guard(sf_dir):
     work = [(i, rows[i % len(rows)][1]) for i in range(N_DOCS)]
 
     spans = [(f"doc-{i:08d}", gen_doc_spans(i, t)) for i, t in work]
-    t0 = time.monotonic()
-    n_chunks = 0
-    for doc_id, sp in spans:
-        n_chunks += len(chunk_document(doc_id, sp, "hybrid"))
-    kernel_sec = time.monotonic() - t0
+    passes = [_kernel_pass(spans) for _ in range(N_PASSES)]
+    kernel_sec = min(t for t, _n in passes)
+    calib = min(calib, _calibrate())
 
-    assert n_chunks > 0
+    assert all(n > 0 for _t, n in passes)
     ratio = kernel_sec / calib
     assert ratio < MAX_RATIO, (
         f"kernel CPU regression: {N_DOCS} docs took {kernel_sec:.2f}s at "

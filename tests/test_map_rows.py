@@ -2,9 +2,9 @@
 ``job.pipeline.map_rows``.
 
 The runner test calls the worker function directly on hand-built
-RecordBatches, without Spark. The static test keeps pandas map stages
-and module-level pandas imports out of the package (a grouped
-``applyInPandas`` function may still import pandas inside its body).
+RecordBatches, without Spark. The static test keeps pandas stages
+(``mapInPandas``, ``applyInPandas``) and every pandas import out of the
+package.
 """
 
 import ast
@@ -64,19 +64,6 @@ def test_row_kernel_without_spark():
     ]
 
 
-def _module_level(tree: ast.Module):
-    """Statements that run at import: the module body, descending into
-    if/try/with blocks but not into function or class bodies."""
-    todo = list(tree.body)
-    while todo:
-        node = todo.pop()
-        yield node
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            continue
-        for field in ("body", "orelse", "finalbody", "handlers"):
-            todo.extend(getattr(node, field, None) or [])
-
-
 def test_no_pandas_map_stages_or_module_pandas_imports():
     stages, imports = [], []
     for root, _dirs, files in os.walk(PKG):
@@ -87,15 +74,13 @@ def test_no_pandas_map_stages_or_module_pandas_imports():
             rel = os.path.relpath(path, PKG)
             with open(path, encoding="utf-8") as fh:
                 src = fh.read()
-            tree = ast.parse(src, path)
-            stages += [
-                f"{rel}:{n.lineno}"
-                for n in ast.walk(tree)
-                if isinstance(n, ast.Call)
-                and isinstance(n.func, ast.Attribute)
-                and n.func.attr == "mapInPandas"
-            ]
-            for n in _module_level(tree):
+            for n in ast.walk(ast.parse(src, path)):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("mapInPandas", "applyInPandas")
+                ):
+                    stages.append(f"{rel}:{n.lineno}")
                 if isinstance(n, ast.Import):
                     mods = [a.name for a in n.names]
                 elif isinstance(n, ast.ImportFrom) and not n.level:
@@ -104,5 +89,5 @@ def test_no_pandas_map_stages_or_module_pandas_imports():
                     continue
                 if any(m.split(".")[0] == "pandas" for m in mods):
                     imports.append(f"{rel}:{n.lineno}")
-    assert not stages, f"mapInPandas stages (use job.pipeline.map_rows): {stages}"
-    assert not imports, f"module-level pandas imports: {imports}"
+    assert not stages, f"pandas stages (use map_rows or the Arrow stages): {stages}"
+    assert not imports, f"pandas imports: {imports}"

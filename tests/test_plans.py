@@ -154,6 +154,9 @@ def test_embedding_near_dup_join_is_guarded(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, "bucket-suppression broadcast missing"
     # the pair join itself is keyed on (band, key): bounded buckets
     assert "band" in plan and "key" in plan
+    # the fetched pairs are scored by the numpy verify, not an
+    # interpreted per-pair lambda
+    assert "zip_with" not in plan
 
 
 def test_embedding_near_dup_bands_carry_no_vectors(spark, sf_dir):
@@ -485,11 +488,11 @@ def test_semantic_dedup_plan_and_planted_semantics(spark, sf_dir):
     df = similarity.semantic_dedup_planted(spark, sf_dir)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
-    # the only keyless joins allowed are the two 1-row centroid-table
-    # broadcasts (seeds pass + refined pass) — the same shape ivf_topk
-    # uses; the PAIRWISE compare must never appear as a nested loop
+    # no keyless join at all: the centroids reach the assignment kernels
+    # as a broadcast variable, and the PAIRWISE compare is grouped by
+    # cluster, never a nested loop
     n_bnlj = plan.count("BroadcastNestedLoopJoin")
-    assert n_bnlj <= 2, f"{n_bnlj} nested-loop joins — pairwise not keyed?"
+    assert n_bnlj == 0, f"{n_bnlj} nested-loop joins — pairwise not keyed?"
 
     rows = df.collect()
     by_id = {r.vec_id: r for r in rows}
@@ -636,11 +639,12 @@ def test_semantic_dedup_overflow_subclustering(spark, sf_dir):
 
 
 def test_subcluster_plan_no_unbounded_fanout(spark, sf_dir):
-    """The sub-cluster pass must add NO unbounded row fan-out: sub-cell
-    assignment is a per-row argmax over the per-cell centroid array
-    (exactly the first-level shape), the only Generate is the bounded
-    dim-explode of the Lloyd update, and the only Window is the seed
-    selection partitioned by cid."""
+    """The sub-cluster pass must add NO row fan-out: both sub-cell
+    assignments (seeds with their Lloyd partials, then the refined
+    centroids) are numpy cell stages over each cell's centroid rows
+    and members, so there is no Generate and no interpreted per-row
+    lambda, and the only Window is the seed selection partitioned by
+    cid."""
     import re
 
     from pyspark.sql import functions as F
@@ -652,17 +656,25 @@ def test_subcluster_plan_no_unbounded_fanout(spark, sf_dir):
         _subcluster_overflow,
     )
 
-    assign, _ = _kmeans_assign(_emb(spark, sf_dir), 4)
+    assign, cents = _kmeans_assign(_emb(spark, sf_dir), 4)
     sizes = assign.groupBy("cid").agg(F.count("*").alias("n_vecs"))
     over = sizes.filter(F.col("n_vecs") > 48).selectExpr(
         "cid", f"{_nsub_expr('n_vecs', 48)} as nsub"
     )
-    plan = plan_of(_subcluster_overflow(assign, over, 48))
+    plan = plan_of(_subcluster_overflow(assign, over, len(cents[0].c)))
     assert "CartesianProduct" not in plan
+    assert "zip_with" not in plan
     gens = re.findall(r"^\(\d+\) Generate\b", plan, re.M)
-    assert len(gens) <= 1, f"{len(gens)} Generates — embedding fan-out?"
+    assert not gens, f"{len(gens)} Generates — embedding fan-out?"
     wins = re.findall(r"^\(\d+\) Window\b", plan, re.M)
     assert len(wins) <= 1, "unexpected window beyond seed rank"
+    # the cell kernel needs each cell's centroid rows ahead of its
+    # members: both cell stages must keep their local (cid, kind) sort
+    sorts = re.findall(
+        r"^Arguments: \[cid#\d+L ASC NULLS FIRST, kind#\d+ ASC NULLS FIRST\]",
+        plan, re.M,
+    )
+    assert len(sorts) == 2, f"{len(sorts)} (cid, kind) sorts"
 
 
 def test_nlist_formula_matches_oracle_params_cte(spark):

@@ -1,34 +1,64 @@
-"""Bit-equality of the round-8 numpy kernels (ops/veccore.py) against
-the JVM higher-order expressions they replaced.
+"""Bit-equality of the numpy kernels (ops/veccore.py) against the JVM
+higher-order expressions they replaced.
 
 The embedding-family oracles match DuckDB because both engines
 accumulate doubles strictly left-to-right; veccore claims the same
 fold. This suite pins that claim directly — same inputs through the
-OLD Spark expressions and the numpy kernels, exact equality — on
-adversarial float32 vectors (denormals, huge/tiny magnitudes, ±0.0,
-cancellation patterns), not just the well-behaved test corpus.
+interpreted Spark expressions (kept here as the reference) and the
+numpy kernels, exact equality — on adversarial float32 vectors
+(denormals, huge/tiny magnitudes, ±0.0, cancellation patterns), not
+just the well-behaved test corpus. It also runs the sub-cluster cell
+kernel on hand-built batches, without Spark.
 """
 
 import math
 import random
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
+from deepdoc_api_spark.ops import veccore
 from deepdoc_api_spark.ops.similarity import (
     _NORM,
-    _WITH_NB,
-    _argmax_cell,
+    _cell_pieces,
+    _decoded,
+    _encoded,
     hyperplane_signs,
 )
-from deepdoc_api_spark.ops import veccore
 from deepdoc_api_spark.ops.veccore import (
     band_keys,
     list_col_to_matrix,
     nearest_centroid,
+    pair_sim_micro,
     seq_norm,
     seq_sum,
+    sim_micro_matrix,
 )
+
+#: the interpreted JVM dot product: a left-to-right double fold
+_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
+    " cast(0.0 as double), (acc, v) -> acc + v)"
+)
+#: a ``cents`` array<struct<cid, c>> column with each centroid's norm
+_WITH_NB = (
+    f"transform(cents, ct -> struct(ct.cid as cid, ct.c as c,"
+    f" {_NORM.format(a='ct.c')} as nb)) as cents"
+)
+
+
+def _argmax_cell(vec: str, nv: str) -> str:
+    """The interpreted nearest centroid over a broadcast ``cents``
+    array (see ``_WITH_NB``): the max of struct(sim_micro, -cid) gives
+    the (sim DESC, cid ASC) tie-break."""
+    dot = _DOT.format(a=vec, b="ct.c")
+    return (
+        f"cast(-array_max(transform(cents, ct -> struct("
+        f"cast(floor({dot} / ({nv} * ct.nb) * 1000000) as bigint)"
+        f" as sim_micro,"
+        f" cast(-ct.cid as bigint) as neg_cid))).neg_cid as bigint)"
+    )
 
 DIM = 16
 N_BANDS = 4
@@ -164,8 +194,6 @@ def test_norm_and_argmax_bitexact(spark, vec_df, monkeypatch):
 
 def test_pairwise_sim_matches_jvm_pair_expression(spark, vec_df):
     vecs, df = vec_df
-    from deepdoc_api_spark.ops.similarity import _DOT
-
     emb_n = df.selectExpr(
         "vec_id", "embedding", f"{_NORM.format(a='embedding')} as nv"
     )
@@ -188,8 +216,7 @@ def test_pairwise_sim_matches_jvm_pair_expression(spark, vec_df):
     for r in jvm:
         want[(r.id_a, r.id_b)] = r.sim_micro
     ia, ib = np.triu_indices(len(vecs), 1)
-    dots = seq_sum(X[ia] * X[ib])
-    sims = np.floor(dots / (nv[ia] * nv[ib]) * 1000000.0).astype(np.int64)
+    sims = pair_sim_micro(X[ia], X[ib], nv[ia], nv[ib])
     for x, y, s in zip(ia, ib, sims):
         assert want[(x, y)] == s, (x, y)
 
@@ -222,3 +249,93 @@ def test_list_col_to_matrix_keeps_ragged_rows_apart():
     rows = _adversarial_vectors(n=6)
     col = pa.array(rows, type=pa.list_(pa.float32())).slice(2, 3)
     assert list_col_to_matrix(col, DIM).tolist() == rows[2:5]
+
+
+def test_product_tiles_stay_under_the_budget(monkeypatch):
+    """sim_micro_matrix and band_keys score their second axis in tiles
+    of veccore.NEAREST_TILE_BYTES: under a budget of three columns
+    (uneven against 7 centroids and 32 hyperplanes) no product passed
+    to seq_sum exceeds it, and every value equals the untiled run."""
+    X = np.array(_adversarial_vectors(n=10), dtype=np.float32).astype(np.float64)
+    nv = seq_norm(X)
+    C = X[:7].copy()
+    nb = seq_norm(C)
+    signs = np.array(
+        [hyperplane_signs(b, DIM) for b in range(N_BANDS * BAND_BITS)],
+        dtype=np.float64,
+    )
+    sims, keys = sim_micro_matrix(X, nv, C, nb), band_keys(X, signs, BAND_BITS)
+
+    budget = 8 * len(X) * DIM * 3
+    sizes = []
+
+    def spy(products):
+        sizes.append(products.nbytes)
+        return seq_sum(products)
+
+    monkeypatch.setattr(veccore, "NEAREST_TILE_BYTES", budget)
+    monkeypatch.setattr(veccore, "seq_sum", spy)
+    assert np.array_equal(sim_micro_matrix(X, nv, C, nb), sims)
+    assert np.array_equal(band_keys(X, signs, BAND_BITS), keys)
+    assert len(sizes) == 3 + 11 and max(sizes) <= budget, sizes
+
+
+def _cell_batch(rows) -> pa.RecordBatch:
+    """A decoded-stage input batch of (cid, kind, id, c) rows."""
+    cid, kind, ids, c = zip(*rows)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(cid, pa.int64()),
+            pa.array(kind, pa.int32()),
+            pa.array(ids, pa.int64()),
+            pa.array(c, pa.list_(pa.float64())),
+        ],
+        names=["cid", "kind", "id", "c"],
+    )
+
+
+def test_cell_kernel_without_spark():
+    """The sub-cluster cell kernel on hand-built sorted batches: cell 5's
+    members span two batches behind its centroid rows, cell 6 has no
+    centroid row, and cell 7's two centroids tie (given in descending
+    scid order, the lower scid must win)."""
+    batches = [
+        _cell_batch(
+            [
+                (5, 0, 1, [0.0, 1.0]),
+                (5, 0, 0, [1.0, 0.0]),
+                (5, 1, 10, [2.0, 0.5]),
+            ]
+        ),
+        _cell_batch(
+            [
+                (5, 1, 11, [0.25, 3.0]),
+                (6, 1, 12, [1.0, 1.0]),
+                (7, 0, 3, [1.0, 1.0]),
+                (7, 0, 1, [2.0, 2.0]),
+                (7, 1, 13, [1.0, 1.0]),
+            ]
+        ),
+    ]
+    schema = pa.schema(  # the sub-cluster assignment's output
+        [
+            ("cid", pa.int64()),
+            ("vec_id", pa.int64()),
+            ("embedding", pa.list_(pa.float32())),
+            ("nv", pa.float64()),
+            ("scid", pa.int64()),
+        ]
+    )
+    out = [
+        _encoded(p, schema)
+        for p in _cell_pieces(_decoded(rb, 2, ("c",)) for rb in batches)
+    ]
+    rows = [r for rb in out for r in rb.to_pylist()]
+    assert [(r["cid"], r["vec_id"], r["scid"]) for r in rows] == [
+        (5, 10, 0),
+        (5, 11, 1),
+        (6, 12, None),
+        (7, 13, 1),
+    ]
+    assert rows[0]["embedding"] == [2.0, 0.5]
+    assert rows[3]["nv"] == math.sqrt(2.0)
